@@ -66,10 +66,15 @@ class IvfPqIndex(IvfIndex):
     """IvfIndex whose assigned table carries PQ codes, plus the FROZEN
     codebook — the ``pq=true`` reloption as a first-class handle (the
     reference stores the codebook IN the index, build.c:497-501, and
-    scores quantized at scan time, scan.c:75-81). Because ``assigned``
-    retains the original vectors alongside the codes, the handle also
-    works anywhere a plain IvfIndex does (hybrid candidate stages,
-    ivf_search) — the codes only accelerate the pq-aware routes."""
+    scores quantized at scan time, scan.c:75-81). ``codebook`` is the
+    local frame :func:`train_codebook` / :func:`load_ivfpq` return: it
+    was trained (or read) once, so searches read it without a job and
+    score codes against the very centroids that encoded them — a lazy
+    lineage here re-ran k-means on every search (~1.4 s each). Because
+    ``assigned`` retains the original vectors alongside the codes, the
+    handle also works anywhere a plain IvfIndex does (hybrid candidate
+    stages, ivf_search) — the codes only accelerate the pq-aware
+    routes."""
 
     def __init__(
         self,
@@ -97,7 +102,9 @@ def build_ivfpq(
     rows (build.c:453-501's CREATE INDEX ... WITH (pq=true) path).
     Search with :func:`ivfpq_search` / :func:`ivfpq_search_df` passing
     ``index.codebook``."""
-    from lanterndb_spark.operators.pq import quantize, train_codebook
+    from lanterndb_spark.operators.pq import (
+        CODEBOOK_SCHEMA, quantize, train_codebook,
+    )
 
     raw = build_ivf(df, vec_col, nlist=nlist, seed=seed, **ivf_kw)
     if raw.nlist == 0:
@@ -105,9 +112,7 @@ def build_ivfpq(
         # build_ivf): typed-empty index, no codebook to train — the
         # searches' nlist==0 guards return typed-empty results
         spark = df.sparkSession
-        cb = spark.createDataFrame(
-            [], "subvector_id int, centroid_id int, c array<float>"
-        )
+        cb = spark.createDataFrame([], CODEBOOK_SCHEMA)
         assigned = raw.assigned.withColumn(
             f"{vec_col}_pq", F.lit(None).cast("array<smallint>")
         )
@@ -338,29 +343,46 @@ def _partial_topk(k: int, id_col: str):
     return partial_topk
 
 
+# element cap of one (B, nlist, dim) routing block: <=~256 MB of f64
+_ROUTE_BLOCK_ELEMS = 1 << 25
+
+
+def _route_blocks(cents: np.ndarray, qarr: np.ndarray, np_eff: int):
+    """Yield ``(start, probes)`` per block of queries: each query's
+    ``np_eff`` nearest centroids, by the SAME ``((cents - q)**2).sum``
+    formulation and np.argsort as ivf_search / ivf_search_batch, so probe
+    choice is bit-identical to the driver-list forms even at near-tied
+    centroid distances (a matmul expansion can order such ties
+    differently). Blocked so the (B, nlist, dim) difference tensor stays
+    within ``_ROUTE_BLOCK_ELEMS``; each query's row is computed alone, so
+    the block size never changes a probe."""
+    dim = cents.shape[1] if cents.ndim == 2 else 1
+    blk = max(1, _ROUTE_BLOCK_ELEMS // max(len(cents) * dim, 1))
+    for s in range(0, len(qarr), blk):
+        qb = qarr[s : s + blk]
+        d = ((cents[None, :, :] - qb[:, None, :]) ** 2).sum(-1)
+        yield s, np.argsort(d, axis=1)[:, :np_eff]
+
+
+def _route_probes(cents: np.ndarray, qarr: np.ndarray, np_eff: int) -> np.ndarray:
+    """(nq, np_eff) probes for a driver-side query matrix (nq >= 1)."""
+    return np.concatenate([p for _, p in _route_blocks(cents, qarr, np_eff)])
+
+
 def _centroid_route(bc, np_eff: int):
     """mapInPandas generator routing each query to its ``np_eff``
-    nearest centroids — the SAME ``((cents - q)**2).sum`` formulation
-    and np.argsort as ivf_search / ivf_search_batch, so probe choice is
-    bit-identical to the driver-list forms even at near-tied centroid
-    distances (a matmul expansion can order such ties differently).
-    Blocked so the (B, nlist, dim) difference tensor stays <=~256 MB.
-    Shared by ivf_search_df and ivfpq_search_df; emits
-    (__qid, __q, cluster_id) x np_eff rows per query."""
+    nearest centroids via :func:`_route_blocks`. Shared by ivf_search_df
+    and ivfpq_search_df; emits (__qid, __q, cluster_id) x np_eff rows
+    per query."""
     def route(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            cents = bc.value
             qids = pdf["__qid"]
             qarr = np.asarray(pdf["__q"].tolist(), dtype=np.float64)
-            dim = cents.shape[1] if cents.ndim == 2 else 1
-            blk = max(1, (1 << 25) // max(len(cents) * dim, 1))
-            for s in range(0, len(qarr), blk):
-                qb = qarr[s : s + blk]
-                d = ((cents[None, :, :] - qb[:, None, :]) ** 2).sum(-1)
-                probes = np.argsort(d, axis=1)[:, :np_eff]
-                B = len(qb)
+            for s, probes in _route_blocks(bc.value, qarr, np_eff):
+                B = len(probes)
+                qb = qarr[s : s + B]
                 yield pd.DataFrame({
                     "__qid": qids.iloc[s : s + B].repeat(np_eff).to_numpy(),
                     "__q": [qb[i].tolist() for i in range(B) for _ in range(np_eff)],
@@ -605,8 +627,8 @@ def ivf_search_df(
     # the same single-collect pattern as knn_join's capped collect):
     # when Catalyst KNOWS the frame's exact row count and it is at most
     # _DRIVER_ROUTE_MAX_QUERIES, collect the queries ONCE and run the
-    # SAME ``((cents - q)**2).sum`` + ``np.argsort`` as _centroid_route
-    # — probe choice is bit-identical by construction — then answer the
+    # SAME blocked ``_route_blocks`` as _centroid_route — probe choice
+    # is bit-identical by construction — then answer the
     # dup/NULL check, the prune stats, the density gate, and the probed
     # set driver-side with NO job at all. The scoring kernel reads the
     # query matrix from a broadcast and the routed relation shrinks to
@@ -651,8 +673,7 @@ def ivf_search_df(
                         "dist double"
                 )
             qarr = np.asarray([list(r[1]) for r in qrows], dtype=np.float64)
-            d = ((index.centroids[None, :, :] - qarr[:, None, :]) ** 2).sum(-1)
-            probes = np.argsort(d, axis=1)[:, :np_eff]
+            probes = _route_probes(index.centroids, qarr, np_eff)
             droute = (keys, qarr, probes)
 
     # duplicate/NULL q_id detection: when the prune pass runs anyway, it
@@ -1113,10 +1134,7 @@ def ivfpq_search_df(
                         "dist double"
                 )
             qarr = np.asarray([list(r[1]) for r in qrows], dtype=np.float64)
-            dists = (
-                (index.centroids[None, :, :] - qarr[:, None, :]) ** 2
-            ).sum(-1)
-            probes = np.argsort(dists, axis=1)[:, :np_eff]
+            probes = _route_probes(index.centroids, qarr, np_eff)
             droute = (keys, qarr, probes)
     if not unique_q_ids and droute is None:
         from lanterndb_spark.operators.hnsw import _has_duplicate_qids
@@ -1558,8 +1576,12 @@ def save_ivfpq(index: IvfPqIndex, path: str, spark=None) -> None:
 def load_ivfpq(
     spark, path: str, vec_col: str, pq_col: str | None = None
 ) -> IvfPqIndex:
+    """Reload a :func:`save_ivfpq` index; the codebook is read once and
+    held frozen, so searches on the handle do not re-read it."""
+    from lanterndb_spark.operators.pq import freeze_codebook
+
     base = load_ivf(spark, path, vec_col)
-    cb = spark.read.parquet(f"{path}/codebook")
+    cb = freeze_codebook(spark.read.parquet(f"{path}/codebook"))
     return IvfPqIndex(base.assigned, base.centroids, vec_col, cb, pq_col)
 
 

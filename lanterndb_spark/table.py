@@ -336,9 +336,9 @@ class LanternTable:
                 params["nlist"] = idx.centroids.shape[0] if hasattr(
                     idx.centroids, "shape") else len(idx.centroids)
                 if kind == "ivfpq":
-                    params["splits"] = int(
-                        idx.codebook.select("subvector_id").distinct().count()
-                    )
+                    from lanterndb_spark.operators.pq import _codebook_arrays
+
+                    params["splits"] = len(_codebook_arrays(idx.codebook))
             elif kind == "srp":
                 params["nbits"] = int(idx.planes.shape[0]) if hasattr(
                     idx.planes, "shape") else len(idx.planes)

@@ -28,3 +28,23 @@ def small_world(spark):
         bits = [float(b) for b in format(i, "03b")]
         rows.append((format(i, "03b"), i % 2 == 0, bits))
     return spark.createDataFrame(rows, "id string, b boolean, v array<float>")
+
+
+@pytest.fixture(scope="session")
+def job_ids(spark):
+    """``job_ids(fn) -> (fn(), [job ids fn submitted])``: brackets ``fn``
+    with two marker jobs and reads the ids between them from
+    ``sc.statusTracker()``."""
+    sc = spark.sparkContext
+
+    def last():
+        sc.parallelize([0], 1).count()
+        return max(sc.statusTracker().getJobIdsForGroup())
+
+    def run(fn):
+        before = last()
+        out = fn()
+        after = last()
+        return out, list(range(before + 1, after))
+
+    return run

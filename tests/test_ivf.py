@@ -633,14 +633,17 @@ def test_ivfpq_search_df_matches_single_and_exact(emb, index, spark):
     assert empty.count() == 0
 
 
-def test_ivfpq_save_load_roundtrip(emb, spark, tmp_path):
+def test_ivfpq_save_load_roundtrip(emb, spark, tmp_path, job_ids):
     """A persisted ivfpq index reloads with its codebook and answers
-    exactly what the in-memory handle answers (no retrain)."""
+    exactly what the in-memory handle answers (no retrain). Both handles
+    hold the codebook frozen: collecting it submits no job."""
     from lanterndb_spark.operators.ivf import (
         build_ivfpq, ivfpq_search, load_ivfpq, save_ivfpq,
     )
 
     idx = build_ivfpq(emb, "embedding", nlist=4, splits=8, clusters=16, seed=42)
+    built, jobs = job_ids(idx.codebook.collect)
+    assert jobs == [] and len(built) == 8 * 16
     q = qvec(emb, 3)
     want = [(r["vec_id"], round(r["dist"], 9)) for r in ivfpq_search(
         idx, idx.codebook, q, k=5, nprobe=2, refine=4, id_col="vec_id"
@@ -648,6 +651,8 @@ def test_ivfpq_save_load_roundtrip(emb, spark, tmp_path):
     path = str(tmp_path / "ivfpq_idx")
     save_ivfpq(idx, path)
     back = load_ivfpq(spark, path, "embedding")
+    loaded, jobs = job_ids(back.codebook.collect)
+    assert jobs == [] and loaded == built
     got = [(r["vec_id"], round(r["dist"], 9)) for r in ivfpq_search(
         back, back.codebook, q, k=5, nprobe=2, refine=4, id_col="vec_id"
     ).collect()]
@@ -1215,3 +1220,71 @@ def test_search_df_driver_route_matches_executor_route(tables, spark):
     for df in (qdf, dup, uniq, assigned_pq):
         df.unpersist()
     idx.assigned.unpersist()
+
+
+def test_ivfpq_search_df_runs_no_codebook_job(emb, spark, job_ids):
+    """A built index's codebook is frozen, so ivfpq_search_df reads it
+    without a job: no stage of the search has a pq.py call site (the
+    lazy codebook re-ran k-means under ``collect at pq.py`` per call)."""
+    from lanterndb_spark.operators.ivf import build_ivfpq, ivfpq_search_df
+
+    idx = build_ivfpq(emb, "embedding", nlist=8, splits=4, clusters=8, seed=3)
+    qdf = _qdf(emb, [0, 3, 7])
+    rows, jobs = job_ids(lambda: ivfpq_search_df(
+        idx, idx.codebook, qdf, k=5, nprobe=2, refine=2, id_col="vec_id"
+    ).collect())
+    assert len(rows) == 3 * 5 and jobs
+    st = spark.sparkContext.statusTracker()
+    names = [
+        st.getStageInfo(sid).name
+        for j in jobs for sid in st.getJobInfo(j).stageIds
+        if st.getStageInfo(sid) is not None
+    ]
+    assert names and not [n for n in names if "pq.py" in n], names
+
+
+def test_driver_route_probes_independent_of_block_size(
+    tables, spark, monkeypatch
+):
+    """The driver route computes probes in blocks of at most
+    _ROUTE_BLOCK_ELEMS distance elements. With the block patched small
+    enough that a batch spans several blocks, probes and search rows
+    equal the single-block ones."""
+    import numpy as np
+
+    from lanterndb_spark.operators import ivf as ivfmod
+    from lanterndb_spark.operators.ivf import ivf_search_df
+    from lanterndb_spark.plans.shape import release
+
+    emb = tables["embeddings"]
+    idx = build_ivf(emb, "embedding", nlist=8, seed=42)
+    qs = [(i, [float(x) for x in r["embedding"]])
+          for i, r in enumerate(emb.limit(24).collect())]
+    qarr = np.asarray([v for _, v in qs], dtype=np.float64)
+    cents = idx.centroids
+    whole = np.argsort(
+        ((cents[None, :, :] - qarr[:, None, :]) ** 2).sum(-1), axis=1
+    )[:, :3]
+    qdf = spark.createDataFrame(qs, "q_id int, query array<double>").persist()
+    qdf.count()  # exact InMemoryRelation rowCount => driver route fires
+
+    def search():
+        out = ivf_search_df(idx, qdf, k=5, nprobe=3, id_col="vec_id")
+        rows = sorted((r[0], r[1], round(r[2], 9)) for r in out.collect())
+        probed = out.__dict__.get("_lantern_probed")
+        release(out)
+        return rows, probed
+
+    one_block = ivfmod._route_probes(cents, qarr, 3)
+    want = search()
+    # 5 queries per block: 24 queries span 5 blocks
+    monkeypatch.setattr(
+        ivfmod, "_ROUTE_BLOCK_ELEMS", 5 * cents.shape[0] * cents.shape[1]
+    )
+    blocks = list(ivfmod._route_blocks(cents, qarr, 3))
+    assert [s for s, _ in blocks] == [0, 5, 10, 15, 20]
+    assert np.array_equal(ivfmod._route_probes(cents, qarr, 3), one_block)
+    assert np.array_equal(one_block, whole)
+    got = search()
+    assert got == want and got[0]
+    qdf.unpersist()

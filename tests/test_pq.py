@@ -19,7 +19,7 @@ def emb(tables):
 
 @pytest.fixture(scope="module")
 def codebook(emb):
-    return train_codebook(emb, "embedding", splits=8, clusters=16, seed=42).cache()
+    return train_codebook(emb, "embedding", splits=8, clusters=16, seed=42)
 
 
 def test_subvector_bounds_remainder():
@@ -89,7 +89,7 @@ def test_adc_knn_recall_vs_exact(emb, codebook):
     assert 5 in ann[:3]
 
 
-def test_train_codebook_inplan_dim_matches_static(emb, spark):
+def test_train_codebook_inplan_dim_matches_static(emb, job_ids):
     """dim=None derives the subvector bounds IN-PLAN from size(v) (r15 —
     the former first() probe job is gone); the codebook must be
     bit-identical to the static-bounds path with the true dim, and the
@@ -98,27 +98,42 @@ def test_train_codebook_inplan_dim_matches_static(emb, spark):
     from pyspark.sql.utils import AnalysisException
 
     dim = len(emb.select("embedding").first()[0])
-    sc = spark.sparkContext
 
-    def njobs(fn):
-        sc.parallelize([0], 1).count()
-        ids = sc.statusTracker().getJobIdsForGroup()
-        before = max(ids) if ids else -1
-        out = fn()
-        sc.parallelize([0], 1).count()
-        ids = sc.statusTracker().getJobIdsForGroup()
-        return out, (max(ids) if ids else -1) - before - 1
-
-    lazy, n_lazy = njobs(lambda: train_codebook(
+    lazy, j_lazy = job_ids(lambda: train_codebook(
         emb, "embedding", splits=3, clusters=8, seed=7).collect())
-    static, n_static = njobs(lambda: train_codebook(
+    static, j_static = job_ids(lambda: train_codebook(
         emb, "embedding", splits=3, clusters=8, seed=7, dim=dim).collect())
     key = lambda rows: sorted(
         (r["subvector_id"], r["centroid_id"], tuple(r["c"])) for r in rows
     )
     assert key(lazy) == key(static)
-    assert n_lazy <= n_static  # the probe job is gone, not moved
+    assert len(j_lazy) <= len(j_static)  # the probe job is gone, not moved
 
     import pytest as _pytest
     with _pytest.raises(Exception, match="splits"):
         train_codebook(emb, "embedding", splits=dim + 1, clusters=4).collect()
+
+
+def test_codebook_is_frozen_at_training(emb, job_ids):
+    """train_codebook trains once, when called: the returned frame is a
+    local relation, so collecting it (or its arrays) submits no job, and
+    every collect sees the same centroids."""
+    from lanterndb_spark.operators.pq import _codebook_arrays
+
+    cb, trained = job_ids(lambda: train_codebook(
+        emb, "embedding", splits=4, clusters=8, seed=7))
+    assert trained  # the training itself ran here
+    assert cb.schema.simpleString() == (
+        "struct<subvector_id:int,centroid_id:int,c:array<float>>"
+    )
+    first, jobs = job_ids(cb.collect)
+    assert jobs == []
+    again, jobs = job_ids(lambda: _codebook_arrays(cb))
+    assert jobs == []
+    assert [(r["subvector_id"], r["centroid_id"]) for r in first] == [
+        (sv, c) for sv in range(4) for c in range(8)
+    ]
+    assert all(
+        np.array_equal(again[r["subvector_id"]][r["centroid_id"]], r["c"])
+        for r in first
+    )
