@@ -2027,17 +2027,37 @@ def _has_duplicate_qids(queries: DataFrame, q_id_col: str) -> bool:
     is narrow, so semantics are bit-identical; unknown or large row
     counts keep the parallel shape — coalesce(1) would serialize
     evaluation of a big or expensive queries lineage."""
-    from lanterndb_spark.plans.shape import estimated_rows
+    from lanterndb_spark.plans.shape import known_small
 
     keys = queries.select(q_id_col)
-    est = estimated_rows(queries)
-    if est is not None and est <= 65536:
+    if known_small(queries):
         keys = keys.coalesce(1)
     row = keys.select(
         (F.count(q_id_col) != F.count_distinct(q_id_col)).alias("dup"),
         ((F.count(F.lit(1)) - F.count(q_id_col)) > 0).alias("has_null"),
     ).first()
     return bool(row["dup"] or row["has_null"])
+
+
+def _collected_qids_need_wrap(
+    keys: list, queries: DataFrame, q_id_col: str
+) -> bool:
+    """Driver-side twin of :func:`_has_duplicate_qids` for callers that
+    already collected the q_id values: True on any NULL or duplicate
+    key, with the aggregate's semantics (count_distinct skips NULLs;
+    Spark treats every NaN as one value, a Python set does not, so NaNs
+    count once explicitly). Unhashable key types fall back to the
+    aggregate over ``queries``."""
+    nonnull = [x for x in keys if x is not None]
+    if len(nonnull) != len(keys):
+        return True
+    try:
+        nans = sum(1 for x in nonnull if isinstance(x, float) and x != x)
+        distinct = len({x for x in nonnull
+                        if not (isinstance(x, float) and x != x)})
+    except TypeError:
+        return _has_duplicate_qids(queries, q_id_col)
+    return distinct + (1 if nans else 0) != len(nonnull)
 
 
 def _restore_surrogate(
@@ -2115,8 +2135,8 @@ def hnsw_search_df(
     it.
 
     ``broadcast_queries``: None (default) takes a DRIVER-side prep +
-    route when Catalyst knows the frame's exact row count is ≤ 65,536
-    (r15, the ivf_search_df driver-route twin): the queries collect
+    route when Catalyst knows the frame's exact row count is small
+    (``shape.known_small``; r15, the ivf_search_df driver-route twin): the queries collect
     once, prep/route through the SAME numpy code the executor pass
     runs (bit-identical), the routed relation shrinks to narrow
     (position, shard) pairs, and the shard kernel reads the query
@@ -2158,10 +2178,9 @@ def hnsw_search_df(
     np_eff = int(nprobe) if routed_probe else 0
 
     if broadcast_queries is None:
-        from lanterndb_spark.plans.shape import estimated_rows
+        from lanterndb_spark.plans.shape import known_small
 
-        est = estimated_rows(queries)
-        broadcast_queries = est is not None and est <= 65_536
+        broadcast_queries = known_small(queries)
     qbc = None
     routed = None
     if broadcast_queries:
@@ -2613,7 +2632,7 @@ def hnsw_insert(
     generation.
 
     ``broadcast_delta``: None (default) auto-picks the broadcast shape
-    when Catalyst knows the delta is small (known rowCount <= 65536 —
+    when Catalyst knows the delta is small (``shape.known_small`` —
     exact for materialized caches / local relations); the streaming
     handles pass True (their micro-batch contract); big or unknown
     deltas keep the cogroup, whose delta side never touches the
@@ -2651,10 +2670,9 @@ def hnsw_insert(
     pq_splits, pq_clusters = index.pq_splits, index.pq_clusters
 
     if broadcast_delta is None:
-        from lanterndb_spark.plans.shape import estimated_rows
+        from lanterndb_spark.plans.shape import known_small
 
-        est = estimated_rows(delta)
-        broadcast_delta = est is not None and est <= 65536
+        broadcast_delta = known_small(delta)
 
     if broadcast_delta:
         # ONE driver collect evaluates the delta lineage exactly once,

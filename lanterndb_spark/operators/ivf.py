@@ -41,12 +41,6 @@ from lanterndb_spark.operators.knn import knn
 # flat, so breakeven density is ~2-3; gate at 8 to keep genuinely
 # small batches on the lower-latency codegen join.
 _ARROW_QPC_CROSSOVER = 8
-# ADC coarse-cut route: at and above this dim the ivfpq kernel decodes
-# the code block once and rides a dgemm cut (r13 — the per-subvector
-# gather measured ~8x slower than matmul at 768d, ab_dim768_r13.json);
-# below it the f32 gather-accumulate keeps its r11-measured 64d shape.
-# Both emit bit-identical rows/distances (exact f64 LUT rescore).
-_ADC_DGEMM_MIN_DIM = 128
 
 
 class IvfIndex:
@@ -317,8 +311,7 @@ def _partial_topk(k: int, id_col: str):
     whenever it doubles, so held memory is O(nq·k), never the raw
     pair count of the partition (on the expr path that pair set is
     rows_probed × queries_per_cluster and must not be materialized
-    whole). pandas (not lexsort) so q_id may be any orderable dtype.
-    Shared by ivf_search_df and ivfpq_search_df."""
+    whole). pandas (not lexsort) so q_id may be any orderable dtype."""
     def partial_topk(batches):
         def cut(pdf):
             pdf = pdf.sort_values(["__qid", "dist", id_col])
@@ -371,9 +364,9 @@ def _route_probes(cents: np.ndarray, qarr: np.ndarray, np_eff: int) -> np.ndarra
 
 def _centroid_route(bc, np_eff: int):
     """mapInPandas generator routing each query to its ``np_eff``
-    nearest centroids via :func:`_route_blocks`. Shared by ivf_search_df
-    and ivfpq_search_df; emits (__qid, __q, cluster_id) x np_eff rows
-    per query."""
+    nearest centroids via :func:`_route_blocks` (ivf_search_df's
+    executor route); emits (__qid, __q, cluster_id) x np_eff rows per
+    query."""
     def route(batches):
         for pdf in batches:
             if not len(pdf):
@@ -425,14 +418,6 @@ def _per_row_qid_wrap(
 # task memory. 32 MiB leaves ~4x headroom under the kernel's own 128 MiB
 # distance-matrix block and absorbs moderate cluster skew.
 _SALT_TARGET_BYTES = 32 << 20
-
-# query batches whose Catalyst-KNOWN exact row count is at or under this
-# bound route on the DRIVER in ivf_search_df (r15): the same 65,536-row
-# known-small convention as hnsw_insert's broadcast-delta gate, and well
-# inside knn_join's standing 100k driver-collect ceiling. Unknown or
-# larger stats keep the executor routing pass (queries never touch the
-# driver — the 100 TB posture).
-_DRIVER_ROUTE_MAX_QUERIES = 65_536
 
 
 def _adaptive_salt(index: "IvfIndex", salt_cap: int) -> int:
@@ -500,11 +485,12 @@ def ivf_search_df(
        :func:`ivf_search`, so per-query results are identical to the
        driver-list form by construction. No driver collect of queries
        — EXCEPT when Catalyst knows the frame's exact row count is
-       ≤ 65,536 (r15): such batches collect once and route on the
-       driver with the identical numpy argsort, the prune stats and
-       dup/NULL check become driver-side lookups (zero jobs), and the
-       scoring kernel reads the query matrix from a broadcast while
-       the routed relation shrinks to (position, cluster) pairs.
+       ≤ ``shape.KNOWN_SMALL_ROWS`` (r15): such batches collect once
+       and route on the driver with the identical numpy argsort, the
+       prune stats and dup/NULL check become driver-side lookups
+       (zero jobs), and the scoring kernel reads the query matrix
+       from a broadcast while the routed relation shrinks to
+       (position, cluster) pairs.
        Unknown or larger stats keep the executor pass.
     2. prune — the routed frame persists and a map-side-combined
        per-cluster count aggregates over the CACHE (so routing runs
@@ -583,13 +569,16 @@ def ivf_search_df(
     ``([col, ...], fn)`` where ``fn(bpdf) -> (rows, dim) float64``.
     When set and the resolved impl is ``arrow``, the base side ships
     ONLY those columns through the Arrow boundary and the kernel
-    decodes them in numpy — ``ivfsq_search_df`` passes its int8 codes
-    + scale this way, cutting the Python-boundary bytes ~8x vs
-    serializing the dequantized float column (measured at 2M x 768d,
-    spark-warehouse/ab_dim768_r13.json). The expr path ignores the
-    hook and reads ``index.vec_col`` (the decoded column must still
-    exist on ``index.assigned`` for it). ``fn`` must reproduce the
-    vec_col values bit-exactly or the two impls diverge."""
+    decodes them in numpy. Two users: ``ivfsq_search_df`` passes its
+    int8 codes + scale (cutting the Python-boundary bytes ~8x vs
+    serializing the dequantized float column, measured at 2M x 768d,
+    spark-warehouse/ab_dim768_r13.json), and ``ivfpq_search_df``
+    passes its PQ codes, decoded against the frozen codebook (its ADC
+    l2sq is exactly the l2sq to the decoded vector). The expr path
+    ignores the hook and reads ``index.vec_col`` (the decoded column
+    must still exist on ``index.assigned`` for it; ivfpq forces
+    ``impl='arrow'``). ``fn`` must reproduce the vec_col values
+    bit-exactly or the two impls diverge."""
     from pyspark.sql import Window
 
     from lanterndb_spark.functions.distance import distance
@@ -626,7 +615,7 @@ def ivf_search_df(
     # KNOWN-SMALL query frames route on the DRIVER (r15, guide §4/§5 —
     # the same single-collect pattern as knn_join's capped collect):
     # when Catalyst KNOWS the frame's exact row count and it is at most
-    # _DRIVER_ROUTE_MAX_QUERIES, collect the queries ONCE and run the
+    # shape.KNOWN_SMALL_ROWS, collect the queries ONCE and run the
     # SAME blocked ``_route_blocks`` as _centroid_route — probe choice
     # is bit-identical by construction — then answer the
     # dup/NULL check, the prune stats, the density gate, and the probed
@@ -638,34 +627,19 @@ def ivf_search_df(
     # stats keep the executor path unchanged.
     droute = None
     if prune and np_eff < index.nlist:
-        from lanterndb_spark.plans.shape import estimated_rows
+        from lanterndb_spark.plans.shape import known_small
 
-        est = estimated_rows(queries)
-        if est is not None and est <= _DRIVER_ROUTE_MAX_QUERIES:
+        if known_small(queries):
             qrows = queries.select(
                 F.col(q_id_col), F.col(q_vec_col).cast("array<double>")
             ).collect()
             keys = [r[0] for r in qrows]
             if not unique_q_ids:
-                # driver-side twin of _has_duplicate_qids over the
-                # collected keys (same semantics as knn_join's check):
-                # count_distinct skips NULLs, all NaNs are one value
-                nonnull = [x for x in keys if x is not None]
-                has_null = len(nonnull) != len(keys)
-                try:
-                    nans = sum(1 for x in nonnull
-                               if isinstance(x, float) and x != x)
-                    dn = len({x for x in nonnull
-                              if not (isinstance(x, float) and x != x)})
-                    has_dup = (dn + (1 if nans else 0)) != len(nonnull)
-                except TypeError:  # unhashable key type: fall back
-                    from lanterndb_spark.operators.hnsw import (
-                        _has_duplicate_qids,
-                    )
+                from lanterndb_spark.operators.hnsw import (
+                    _collected_qids_need_wrap,
+                )
 
-                    has_dup = _has_duplicate_qids(queries, q_id_col)
-                    has_null = False  # the aggregate covers NULLs too
-                if has_dup or has_null:
+                if _collected_qids_need_wrap(keys, queries, q_id_col):
                     return _wrap()
             if not qrows:
                 return spark.createDataFrame(
@@ -840,9 +814,9 @@ def ivf_search_df(
             # (flatnonzero/repeat per column) plus a column-strided
             # partition. Honest evidence state (r12, the r11 profile
             # artifact was lost): at k=10 eval shapes the two kernels
-            # measure EQUAL (tools/ab_qmajor_r12.py vs the r10 kernel,
-            # spark-warehouse/ab_qmajor_r12*.json — small-k cuts are not
-            # the bottleneck); the rewrite's measured win is the LARGE-k
+            # measure EQUAL (vs the r10 kernel, spark-warehouse/
+            # ab_qmajor_r12*.json — small-k cuts are not the
+            # bottleneck); the rewrite's measured win is the LARGE-k
             # coarse cut of the hybrid candidate stage (k=ef), where the
             # r11 same-session profile halved 24.2 s -> 11.9 s at 2k
             # queries over 2M (spark-warehouse/hybrid_profile_r11.json)
@@ -965,6 +939,116 @@ def ivf_search_df(
     return out
 
 
+def _coarse_rerank_df(
+    index: IvfIndex,
+    coarse_index: IvfIndex,
+    queries: DataFrame,
+    k: int,
+    refine: int,
+    id_col: str,
+    q_id_col: str,
+    q_vec_col: str,
+    unique_q_ids: bool,
+    base_decode: tuple,
+    **search_params,
+) -> DataFrame:
+    """Shared body of the quantized batch forms (:func:`ivfsq_search_df`,
+    :func:`ivfpq_search_df`), which differ only in ``coarse_index`` and
+    ``base_decode``:
+
+    1. per-row q_id prologue — duplicate or NULL q_id VALUES take the
+       same surrogate wrap as ``ivf_search_df`` (without it the
+       re-rank's join-by-q_id would also fan out across the duplicates
+       and drop NULL keys); ``unique_q_ids=True`` skips the check;
+    2. coarse — ONE :func:`ivf_search_df` pass over ``coarse_index``
+       for the top ``k·refine`` per query, whose arrow kernel decodes
+       ``base_decode``'s code columns in numpy;
+    3. re-rank — candidates join the raw base rows by id (restricted to
+       the coarse pass's probed clusters, keeping its partition
+       pruning) and their ORIGINAL query vectors by q_id (≤ k·refine
+       rows per query), then one exact l2sq window with the shared
+       (dist, id) tie order cuts the final top-k.
+
+    The coarse stage's persisted cache rides the result for
+    ``plans.shape.release``."""
+    from pyspark.sql import Window
+
+    from lanterndb_spark.functions.distance import distance
+
+    if not unique_q_ids and index.nlist > 0:
+        from lanterndb_spark.operators.hnsw import _has_duplicate_qids
+
+        if _has_duplicate_qids(queries, q_id_col):
+            return _per_row_qid_wrap(
+                lambda q: _coarse_rerank_df(
+                    index, coarse_index, q, k, refine, id_col, q_id_col,
+                    q_vec_col, True, base_decode, **search_params,
+                ),
+                queries, q_id_col, q_vec_col, id_col,
+            )
+    coarse = ivf_search_df(
+        coarse_index, queries, k=k * refine, id_col=id_col,
+        q_id_col=q_id_col, q_vec_col=q_vec_col, unique_q_ids=True,
+        base_decode=base_decode, **search_params,
+    )
+    persisted = coarse.__dict__.get("_lantern_persisted", [])
+    qslim = queries.select(
+        q_id_col, F.col(q_vec_col).cast("array<double>").alias("__qv")
+    )
+    rerank_src = index.assigned
+    probed = coarse.__dict__.get("_lantern_probed")
+    if probed is not None:
+        rerank_src = rerank_src.filter(F.col("cluster_id").isin(probed))
+    rescored = (
+        coarse.drop("dist")
+        .join(rerank_src.select(id_col, index.vec_col), on=id_col)
+        .join(qslim, on=q_id_col)
+        .withColumn(
+            "dist",
+            distance("l2sq", F.col(index.vec_col), F.col("__qv")).cast("double"),
+        )
+    )
+    w = Window.partitionBy(q_id_col).orderBy(
+        F.col("dist").asc(), F.col(id_col).asc()
+    )
+    out = (
+        rescored.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .select(q_id_col, id_col, "dist")
+    )
+    if persisted:
+        from lanterndb_spark.plans.shape import attach_persisted
+
+        out = attach_persisted(out, *persisted)
+    return out
+
+
+def _pq_decoder(codebook: DataFrame, pq_col: str):
+    """``base_decode`` function for PQ codes: an (nb, splits) code block
+    decodes to an (nb, dim) float64 block, ``book_s[codes[:, s]]`` into
+    each subvector's ``subvector_bounds`` slice — bit-exact with
+    ``pq.dequantize`` (codebook entries are float32 values). The frozen
+    codebook is read without a job and reaches the kernel through one
+    broadcast."""
+    from lanterndb_spark.operators.pq import _codebook_arrays, subvector_bounds
+
+    books = _codebook_arrays(codebook)
+    dim = sum(b.shape[1] for b in books)
+    # an empty build has no codebook (and no search reaches the kernel)
+    bounds = subvector_bounds(dim, len(books)) if books else []
+    bc = codebook.sparkSession.sparkContext.broadcast((books, bounds))
+
+    def decode(bpdf: pd.DataFrame) -> np.ndarray:
+        bks, bnds = bc.value
+        codes = np.asarray(bpdf[pq_col].tolist(), dtype=np.int64)
+        X = np.empty((len(codes), dim), dtype=np.float64)
+        for s, ((lo, hi), book) in enumerate(zip(bnds, bks)):
+            X[:, lo:hi] = book[codes[:, s]]
+        return X
+
+    return decode
+
+
 def ivfpq_search_df(
     index: IvfIndex,
     codebook: DataFrame,
@@ -983,28 +1067,26 @@ def ivfpq_search_df(
     """DataFrame-native batch twin of :func:`ivfpq_search` — the
     reference's pq=true index mode (build.c:497-501, scan.c:75-81) at
     eval-pass query volumes, completing the batch family over the
-    byte-coded billion-scale layout:
+    byte-coded billion-scale layout.
 
-    1. route — queries route to their ``nprobe`` nearest centroids
-       executor-side (``_centroid_route``: same argsort as the
-       driver-list forms, unbounded batch). Catalyst-known frames of
-       ≤ 65,536 rows route on the DRIVER instead (r15, identical
-       argsort — see ``ivf_search_df``), folding the routing pass, the
-       persist, the distinct collect, and the duplicate-check job into
-       one collect.
-    2. prune — the routed frame persists (single evaluation of the
-       queries lineage, like ``ivf_search_df``) and its per-cluster
-       counts turn the probed union into a static ``isin`` the coded
-       scan pushes down.
-    3. ADC coarse — SALTED cogroup (per-task memory cluster_rows/salt,
-       the ``ivf_search_df`` arrow kernel's shape) where each
-       (cluster, salt) task builds the per-query LUT of
-       (subvector × centroid) squared distances — the EXACT adc_knn
-       math (pq.py: ``Σ LUT[s, code[s]]``) — and gathers scores for
-       its code block, cutting to the per-query top ``k·refine`` with
-       boundary ties kept for the window. The scan that touches every
-       surviving row reads 1 byte/subvector, not 4·dim.
-    4. re-rank — candidates join their ORIGINAL query vectors by q_id
+    ADC l2sq (pq.py: ``Σ_s LUT[s, code_s]`` with
+    ``LUT[s, c] = ||q_s - book_s[c]||²``) is EXACTLY the l2sq between
+    the query and the decoded code vector, so the coarse pass is plain
+    :func:`ivf_search_df` over decoded codes, built like
+    :func:`ivfsq_search_df` (:func:`_coarse_rerank_df`):
+
+    1. coarse — one ``ivf_search_df(impl='arrow')`` call for the top
+       ``k·refine`` per query: its routing (driver route for
+       Catalyst-known small frames, executor route otherwise), cluster
+       pruning and salted cogroup. ``base_decode`` ships only the code
+       column through the exchange and the Arrow boundary, and each
+       (cluster, salt) task decodes its code block once against the
+       frozen codebook (:func:`_pq_decoder`) before the kernel's
+       blocked matmul cut. The scan that touches every surviving row
+       reads the codes, not 4·dim bytes per row. Coarse distances equal
+       the ADC LUT sums up to f64 rounding; only exact distances are
+       returned.
+    2. re-rank — candidates join their ORIGINAL query vectors by q_id
        and the raw base rows by id (≤ k·refine rows per query), one
        exact l2sq window resolves the final top-k.
 
@@ -1014,408 +1096,58 @@ def ivfpq_search_df(
     the result for ``plans.shape.release``. Like the other re-ranked
     forms, the queries lineage is read once more by the re-rank join —
     persist heavy lineages before calling. Duplicate q_id VALUES are
-    PER-ROW via the same surrogate wrap as ``ivf_search_df`` (without
-    it the re-rank's join-by-q_id would also fan out across the
-    duplicates); ``unique_q_ids=True`` skips the detection pass.
+    PER-ROW via the same surrogate wrap as ``ivf_search_df``;
+    ``unique_q_ids=True`` skips the detection pass.
 
-    WHEN TO PICK THIS over plain ``ivf_search_df`` (measured at 20M x
-    64d, spark-warehouse/ab_ivfpq_disk_r12.json, AND at 2M x 768d,
-    spark-warehouse/ab_dim768_r13.json): ivfpq is the
+    WHEN TO PICK THIS over plain ``ivf_search_df``: ivfpq is the
     CAPACITY/FOOTPRINT option, not the wall-clock option — its coarse
     scan reads ~30x fewer bytes (1 byte/subvector vs 4/dim, and
     parquet column pruning delivers that on disk: 197 MB vs 5.9 GB at
-    2M x 768d), but the ADC gather+LUT cost exceeded the saved decode
-    on page-cached local storage at BOTH dims: 2.0x slower than ivf in
-    RAM / 1.55x off parquet at 64d, and ~5-8x slower at 768d (the
-    LUT gather scales with splits=dim/8 while ivf's matmul rides dgemm,
-    so higher dim makes the compute gap WORSE on hot storage, not
-    better — the r12 conjecture that dim would flip the RAM-tier
-    crossover is refuted; what 768d does amplify is the absolute byte
-    gap, i.e. the cold-storage/capacity case). ADC ordering noise also
-    grows with dim, and at 768d it is a recall CEILING, not a knob
-    (recall-matched sweep, spark-warehouse/recall_ops_r14.json): on the
-    2M iid-gaussian corpus recall@10 plateaus at 0.451 even at
-    nprobe=nlist with refine=30 — there is NO 0.8 operating point
-    within a block-safe refine window. Keep k*refine BELOW
-    rows/(nlist*salt) (~the per-cogroup-block size) or the coarse
-    per-block cut prunes nothing and the full probed volume hits the
-    global window (measured: refine=100 at 2M/256/8 turned a 30 ms/q
-    scan into 175 ms/q — arms_refine100 in the r13 artifact). Choose
-    ivfpq when the coarse table cannot fit hot storage at all (the 30x
-    smaller scan is the difference between a cold S3/HDFS read of
-    197 MB vs 5.9 GB per batch, where bandwidth, not decode, is the
-    wall) AND the recall target tolerates the ADC ceiling (or refine
-    can ride a larger block: fewer salts, bigger clusters); choose
-    plain ivf whenever the f32/f64 table is servable, and SQ8 as the
-    middle tier. At MATCHED RECALL sq8 carries no quality tax at all:
-    its 768d recall curve is pointwise identical to raw ivf (0.468 /
-    0.687 / 0.871 / 0.972 at nprobe 32/64/96/128, refine=10 — the
-    exact re-rank absorbs the int8 rounding), so the 1/4-byte scan is
-    free quality-wise; recall-matched walls are recorded per-arm with
-    in-JVM clock probes in recall_ops_r14.json (this host's clock
-    swings ~3x between arms — compare walls only with their probes,
-    e.g. ivf 31.0 ms/q@0.87 at probe 78 GFLOP/s vs ivfsq 34.7
-    ms/q@0.87 at probe 226). Two honest context lines from that sweep:
-    on ISOTROPIC gaussian 768d even raw ivf must probe fraction 0.375
-    of clusters for 0.8 recall and 0.5 for 0.9 (cluster pruning buys
-    only ~2-3x over a full scan in this worst case — real embedding
-    manifolds cluster far better), and the graph backend needs
-    (nprobe=200/400 shards, ef=256) for 0.9, at ~10x the ivf wall at
-    this scale — the dgemm coarse-scan family is the 768d default."""
-    from pyspark.sql import Window
-
-    from lanterndb_spark.functions.distance import distance
-    from lanterndb_spark.operators.pq import _codebook_arrays, subvector_bounds
-    from lanterndb_spark.plans.shape import widen_partitions
-
+    2M x 768d). The wall-clock A/Bs on record were measured on the
+    former LUT-gather ADC kernel, since removed, not on this decode +
+    matmul kernel: at 20M x 64d (spark-warehouse/ab_ivfpq_disk_r12.json)
+    it ran 2.0x slower than ivf in RAM and 1.55x off parquet, and at
+    2M x 768d (spark-warehouse/ab_dim768_r13.json) ~5-8x slower, the
+    gather scaling with splits=dim/8. Re-measure before quoting a wall
+    for the current kernel. ADC ordering noise grows with dim, and at
+    768d it is a recall CEILING, not a knob (recall-matched sweep,
+    spark-warehouse/recall_ops_r14.json): on the 2M iid-gaussian
+    corpus recall@10 plateaus at 0.451 even at nprobe=nlist with
+    refine=30 — there is NO 0.8 operating point within a block-safe
+    refine window. Keep k*refine BELOW rows/(nlist*salt) (~the
+    per-cogroup-block size) or the coarse per-block cut prunes nothing
+    and the full probed volume hits the global window (measured on the
+    gather kernel: refine=100 at 2M/256/8 turned a 30 ms/q scan into
+    175 ms/q — arms_refine100 in the r13 artifact). Choose ivfpq when
+    the coarse table cannot fit hot storage at all (the 30x smaller
+    scan is the difference between a cold S3/HDFS read of 197 MB vs
+    5.9 GB per batch, where bandwidth, not decode, is the wall) AND the
+    recall target tolerates the ADC ceiling (or refine can ride a
+    larger block: fewer salts, bigger clusters); choose plain ivf
+    whenever the f32/f64 table is servable, and SQ8 as the middle tier.
+    At MATCHED RECALL sq8 carries no quality tax at all: its 768d
+    recall curve is pointwise identical to raw ivf (0.468 / 0.687 /
+    0.871 / 0.972 at nprobe 32/64/96/128, refine=10 — the exact re-rank
+    absorbs the int8 rounding), so the 1/4-byte scan is free
+    quality-wise; recall-matched walls are recorded per-arm with in-JVM
+    clock probes in recall_ops_r14.json (this host's clock swings ~3x
+    between arms — compare walls only with their probes, e.g. ivf 31.0
+    ms/q@0.87 at probe 78 GFLOP/s vs ivfsq 34.7 ms/q@0.87 at probe
+    226). Two honest context lines from that sweep: on ISOTROPIC
+    gaussian 768d even raw ivf must probe fraction 0.375 of clusters
+    for 0.8 recall and 0.5 for 0.9 (cluster pruning buys only ~2-3x
+    over a full scan in this worst case — real embedding manifolds
+    cluster far better), and the graph backend needs (nprobe=200/400
+    shards, ef=256) for 0.9, at ~10x the ivf wall at this scale — the
+    dgemm coarse-scan family is the 768d default."""
     if id_col is None:
         raise ValueError("ivfpq_search_df requires id_col (tie-break + output key)")
-    if nprobe < 1:
-        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-    if salt < 1:
-        raise ValueError(f"salt must be >= 1, got {salt}")
     pq_col = pq_col or f"{index.vec_col}_pq"
-    spark = index.assigned.sparkSession
-    q_id_type = queries.schema[q_id_col].dataType.simpleString()
-    id_type = index.assigned.schema[id_col].dataType.simpleString()
-    if index.nlist == 0:
-        return spark.createDataFrame(
-            [], f"{q_id_col} {q_id_type}, {id_col} {id_type}, dist double"
-        )
-    np_eff = min(int(nprobe), index.nlist)
-
-    def _wrap():
-        return _per_row_qid_wrap(
-            lambda q: ivfpq_search_df(
-                index, codebook, q, k=k, nprobe=nprobe, refine=refine,
-                pq_col=pq_col, id_col=id_col, q_id_col=q_id_col,
-                q_vec_col=q_vec_col, prune=prune, salt=salt,
-                unique_q_ids=True,
-            ),
-            queries, q_id_col, q_vec_col, id_col,
-        )
-
-    # KNOWN-SMALL query frames route on the DRIVER — the same gate,
-    # numpy formulation, and dup/NULL semantics as ivf_search_df's
-    # driver route (r15): the routing pass, its persist, the distinct
-    # collect, AND the standalone duplicate-check job all fold into one
-    # collect of the (Catalyst-known ≤ 65,536-row) query frame.
-    droute = None
-    if prune and np_eff < index.nlist:
-        from lanterndb_spark.plans.shape import estimated_rows
-
-        est = estimated_rows(queries)
-        if est is not None and est <= _DRIVER_ROUTE_MAX_QUERIES:
-            qrows = queries.select(
-                F.col(q_id_col), F.col(q_vec_col).cast("array<double>")
-            ).collect()
-            keys = [r[0] for r in qrows]
-            if not unique_q_ids:
-                nonnull = [x for x in keys if x is not None]
-                has_null = len(nonnull) != len(keys)
-                try:
-                    nans = sum(1 for x in nonnull
-                               if isinstance(x, float) and x != x)
-                    dn = len({x for x in nonnull
-                              if not (isinstance(x, float) and x != x)})
-                    has_dup = (dn + (1 if nans else 0)) != len(nonnull)
-                except TypeError:  # unhashable key type: fall back
-                    from lanterndb_spark.operators.hnsw import (
-                        _has_duplicate_qids,
-                    )
-
-                    has_dup = _has_duplicate_qids(queries, q_id_col)
-                    has_null = False
-                if has_dup or has_null:
-                    return _wrap()
-            if not qrows:
-                return spark.createDataFrame(
-                    [], f"{q_id_col} {q_id_type}, {id_col} {id_type}, "
-                        "dist double"
-                )
-            qarr = np.asarray([list(r[1]) for r in qrows], dtype=np.float64)
-            probes = _route_probes(index.centroids, qarr, np_eff)
-            droute = (keys, qarr, probes)
-    if not unique_q_ids and droute is None:
-        from lanterndb_spark.operators.hnsw import _has_duplicate_qids
-
-        if _has_duplicate_qids(queries, q_id_col):
-            return _wrap()
-    kk = int(k) * int(refine)
-    books = _codebook_arrays(codebook)
-    dim = sum(b.shape[1] for b in books)
-    bounds = subvector_bounds(dim, len(books))
-    bc_books = spark.sparkContext.broadcast((books, bounds))
-    # captured driver-side so the kernel closure carries the value (the
-    # executors import the module fresh; tests force a branch by
-    # patching the module constant before the call)
-    adc_dgemm_min_dim = _ADC_DGEMM_MIN_DIM
-    routed = None
-    if droute is None:
-        bc = spark.sparkContext.broadcast(index.centroids)
-        qsel = queries.select(
-            F.col(q_id_col).alias("__qid"),
-            F.col(q_vec_col).cast("array<double>").alias("__q"),
-        )
-        from lanterndb_spark.plans.shape import coalesce_known_small
-
-        routed = coalesce_known_small(qsel, queries).mapInPandas(
-            _centroid_route(bc, np_eff),
-            f"__qid {q_id_type}, __q array<double>, cluster_id int",
-        )
-
-    base = index.assigned.select("cluster_id", id_col, pq_col)
-    cached_routed = None
-    probed = None
-    if droute is not None:
-        keys, qarr, probes = droute
-        counts = np.bincount(probes.reshape(-1), minlength=index.nlist)
-        probed = [int(c) for c in np.nonzero(counts)[0]]
-        base = base.filter(F.col("cluster_id").isin(probed))
-    elif prune and np_eff < index.nlist:
-        cached_routed = routed.persist()
-        probed = [
-            int(r["cluster_id"])
-            for r in cached_routed.select("cluster_id").distinct().collect()
-        ]  # bounded: <= nlist rows
-        routed = cached_routed
-        base = base.filter(F.col("cluster_id").isin(probed))
-    data = widen_partitions(base)
-
-    salt_eff = _adaptive_salt(index, salt)
-    base_s = data.withColumn(
-        "__salt", F.pmod(F.hash(F.col(id_col)), F.lit(salt_eff)).cast("int")
+    return _coarse_rerank_df(
+        index, index, queries, k, refine, id_col, q_id_col, q_vec_col,
+        unique_q_ids, ([pq_col], _pq_decoder(codebook, pq_col)),
+        nprobe=nprobe, prune=prune, salt=salt, impl="arrow",
     )
-    qbc = None
-    if droute is not None:
-        keys, qarr, probes = droute
-        nq = len(keys)
-        qkeys = np.empty(nq, dtype=object)
-        qkeys[:] = keys
-        qbc = spark.sparkContext.broadcast((qkeys, qarr))
-        routed_n = spark.createDataFrame(pd.DataFrame({
-            "__pos": np.repeat(np.arange(nq, dtype=np.int32), np_eff),
-            "cluster_id": probes.reshape(-1).astype(np.int32),
-        }))
-        routed_s = routed_n.withColumn(
-            "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_eff - 1)))
-        )
-    else:
-        routed_s = routed.withColumn(
-            "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_eff - 1)))
-        )
-
-    def score(key, bpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-        # QUERY-MAJOR ADC kernel (r11, same rewrite as ivf_search_df's):
-        # the per-subvector LUT gather runs over ALL queries of a block
-        # at once ((B, nb) per split, summed in place) and the top-kk
-        # cut is one contiguous partition(axis=1) + one nonzero — the
-        # previous kernel rebuilt a (splits, nclusters) table and cut
-        # per QUERY in python, the loop the 2M profile showed dominating
-        if not len(bpdf) or not len(qpdf):
-            return pd.DataFrame({"__qid": [], id_col: [], "dist": []})
-        bks, bnds = bc_books.value
-        codes = np.asarray(bpdf[pq_col].tolist(), dtype=np.int64)
-        ids = bpdf[id_col].to_numpy()
-        if qbc is not None:
-            qk, qm = qbc.value
-            pos = qpdf["__pos"].to_numpy()
-            Q = qm[pos]
-            qids = qk[pos]
-        else:
-            Q = np.asarray(qpdf["__q"].tolist(), dtype=np.float64)
-            qids = qpdf["__qid"].to_numpy()
-        splits = len(bks)
-        nb = codes.shape[0]
-        dim = bnds[-1][1]
-        # decode-once + dgemm coarse cut (r13): ADC l2sq decomposes
-        # EXACTLY as ||q - decode(codes)||^2, so at wide dims the block
-        # decodes its codes to floats ONCE (nb x dim, amortized over
-        # every query probing the cluster) and the coarse cut rides the
-        # same blocked matmul as ivf_search_df's kernel — the
-        # per-subvector gather-accumulate materializes `splits` (B, nb)
-        # temporaries and measured ~8x slower than the dgemm scan at
-        # 768d (ab_dim768_r13.json) while the r11 A/B showed it
-        # NON-dominant at 64d, hence the >=128d gate (the 64d path
-        # keeps its measured shape). The margin + exact f64 LUT rescore
-        # below keeps output rows and distances BIT-IDENTICAL either
-        # way, so the gate is a pure speed knob.
-        use_dgemm = kk < nb and dim >= adc_dgemm_min_dim
-        if use_dgemm:
-            Xh = np.empty((nb, dim), dtype=np.float64)
-            for sv, ((lo, hi), book) in enumerate(zip(bnds, bks)):
-                Xh[:, lo:hi] = book[codes[:, sv]]
-            XhT = np.ascontiguousarray(Xh.T)
-            xhn = (Xh**2).sum(1)
-        out_q, out_i, out_d = [], [], []
-        # block queries so the (B, nb) score matrix stays <=~128 MB
-        blk = max(1, (1 << 24) // max(nb, 1))
-        for s in range(0, len(Q), blk):
-            Qb = Q[s : s + blk]
-            if kk < nb and use_dgemm:
-                # dgemm coarse cut over the decoded block (see the
-                # decode comment above the loop): cancellation error in
-                # qn - 2qx + xn is bounded by ~1e-16 x the NORMS, not
-                # the (possibly tiny) distance, so the superset margin
-                # scales with (|q|^2 + max|x|^2) — at 2e-9 relative it
-                # is ~1e7x the true fp error and still keeps the
-                # superset within ties of the exact cut. NO LUT build
-                # on this route: the (B, nclusters, dim) LUT pass costs
-                # ~nclusters/nb of the scan itself (26% at 977-row
-                # blocks) and the rescore below computes its few
-                # superset pairs directly from the codebooks.
-                qn2 = (Qb**2).sum(1)
-                d_apx = Qb @ XhT
-                d_apx *= -2.0
-                d_apx += qn2[:, None]
-                d_apx += xhn[None, :]
-                thr = np.partition(d_apx, kk - 1, axis=1)[:, kk - 1]
-                margin = 2e-9 * (qn2 + float(xhn.max()) + 1.0)
-                qi, ri = np.nonzero(d_apx <= (thr + margin)[:, None])
-                # exact f64 rescore of the margin superset, computed
-                # per pair from the codebooks: (book[code] - q_s)^2
-                # summed over the subvector then accumulated in
-                # ascending-subvector order — the IDENTICAL ieee ops
-                # and order as the LUT-gather rescore (the LUT entry is
-                # the same 8-element sum), so rows and distances stay
-                # bit-identical across the route gate
-                d64 = None
-                for sv, ((lo, hi), book) in enumerate(zip(bnds, bks)):
-                    diff = book[codes[ri, sv]] - Qb[qi, lo:hi]
-                    term = (diff**2).sum(1)
-                    d64 = term if d64 is None else d64 + term
-                order = np.lexsort((ri, d64, qi))
-                qi, ri, d64 = qi[order], ri[order], d64[order]
-                starts = np.flatnonzero(np.r_[True, qi[1:] != qi[:-1]])
-                runs = np.diff(np.r_[starts, len(qi)])
-                kth = starts + np.minimum(kk, runs) - 1
-                thr64 = np.repeat(d64[kth], runs)
-                keep = d64 <= thr64
-                qi, ri, d64 = qi[keep], ri[keep], d64[keep]
-            elif kk < nb:
-                # per-subvector f64 LUTs (tiny: splits x (B, nclusters))
-                # — the gather cut scans them and the rescore re-reads
-                # them; the dgemm route above skips the build entirely
-                luts = [
-                    ((book[None, :, :] - Qb[:, lo:hi][:, None, :]) ** 2).sum(-1)
-                    for (lo, hi), book in zip(bnds, bks)
-                ]
-                # f32 coarse cut: the (B, nb) gather-accumulate is
-                # memory-bandwidth-bound under 32 parallel workers (the
-                # 20M smoke read 2775 s for this stage in f64 — SLOWER
-                # than the full-precision scan it exists to beat), so
-                # the scan runs at half the bytes and survivors are
-                # rescored in f64. A conservative relative margin on
-                # the f32 threshold keeps the survivor set a SUPERSET
-                # of the exact cut (f32 accumulation of `splits`
-                # nonnegative terms errs < ~1e-6 relative; margin is
-                # 1e-4), and the exact tie-inclusive re-cut below emits
-                # BIT-IDENTICAL rows and distances to an all-f64 pass.
-                # (an L2-cache-blocked variant of this accumulation —
-                # chunking columns so the (B, cblk) accumulator stays
-                # resident across the 8 gathers — was A/B'd in r11 at
-                # 20M/10k-q and measured FLAT: 126-150 s vs 130.8 s
-                # unblocked; at nprobe=32 the coarse gather no longer
-                # dominates the end-to-end, so the simpler form stays)
-                d32 = None
-                for sv in range(splits):
-                    g = luts[sv].astype(np.float32)[:, codes[:, sv]]
-                    if d32 is None:
-                        d32 = g
-                    else:
-                        d32 += g
-                thr32 = np.partition(d32, kk - 1, axis=1)[:, kk - 1]
-                margin = np.float32(1e-4) * (np.abs(thr32) + np.float32(1.0))
-                qi, ri = np.nonzero(d32 <= (thr32 + margin)[:, None])
-                # exact f64 rescore of the margin superset — same
-                # ascending-subvector addition order as the f64
-                # accumulator, so values are bit-identical to it
-                d64 = luts[0][qi, codes[ri, 0]]
-                for sv in range(1, splits):
-                    d64 = d64 + luts[sv][qi, codes[ri, sv]]
-                order = np.lexsort((ri, d64, qi))
-                qi, ri, d64 = qi[order], ri[order], d64[order]
-                starts = np.flatnonzero(np.r_[True, qi[1:] != qi[:-1]])
-                runs = np.diff(np.r_[starts, len(qi)])
-                kth = starts + np.minimum(kk, runs) - 1
-                thr64 = np.repeat(d64[kth], runs)
-                keep = d64 <= thr64
-                qi, ri, d64 = qi[keep], ri[keep], d64[keep]
-            else:
-                # covering cut (every row survives): straight f64 pass
-                luts = [
-                    ((book[None, :, :] - Qb[:, lo:hi][:, None, :]) ** 2).sum(-1)
-                    for (lo, hi), book in zip(bnds, bks)
-                ]
-                d = None
-                for sv in range(splits):
-                    g = luts[sv][:, codes[:, sv]]
-                    if d is None:
-                        d = g
-                    else:
-                        d += g
-                B = d.shape[0]
-                qi = np.repeat(np.arange(B), nb)
-                ri = np.tile(np.arange(nb), B)
-                d64 = d[qi, ri]
-            out_q.append(qids[s + qi])
-            out_i.append(ids[ri])
-            out_d.append(d64)
-        return pd.DataFrame({
-            "__qid": np.concatenate(out_q),
-            id_col: np.concatenate(out_i),
-            "dist": np.concatenate(out_d),
-        })
-
-    cand = (
-        base_s.groupBy("cluster_id", "__salt")
-        .cogroup(routed_s.groupBy("cluster_id", "__salt"))
-        .applyInPandas(
-            score, f"__qid {q_id_type}, {id_col} {id_type}, dist double"
-        )
-    )
-    cand = cand.mapInPandas(
-        _partial_topk(kk, id_col),
-        f"__qid {q_id_type}, {id_col} {id_type}, dist double",
-    )
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    coarse = (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= kk)
-        .select(F.col("__qid").alias(q_id_col), id_col)
-    )
-    qslim = queries.select(
-        q_id_col, F.col(q_vec_col).cast("array<double>").alias("__qv")
-    )
-    rerank_src = index.assigned
-    if probed is not None:
-        # candidates can only come from the probed clusters — keep the
-        # coarse pass's partition pruning on the re-rank scan too (a
-        # partitionBy(cluster_id) layout would otherwise full-scan here)
-        rerank_src = rerank_src.filter(F.col("cluster_id").isin(probed))
-    rescored = (
-        coarse.join(rerank_src.select(id_col, index.vec_col), on=id_col)
-        .join(qslim, on=q_id_col)
-        .withColumn(
-            "dist",
-            distance("l2sq", F.col(index.vec_col), F.col("__qv")).cast("double"),
-        )
-    )
-    w2 = Window.partitionBy(q_id_col).orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    out = (
-        rescored.withColumn("__rn", F.row_number().over(w2))
-        .filter(F.col("__rn") <= k)
-        .select(q_id_col, id_col, "dist")
-    )
-    if cached_routed is not None:
-        from lanterndb_spark.plans.shape import attach_persisted
-
-        out = attach_persisted(out, cached_routed)
-    return out
 
 
 def ivfsq_search_df(
@@ -1445,7 +1177,8 @@ def ivfsq_search_df(
     reads the on-the-fly dequantized column. Then the candidates join
     their ORIGINAL query
     vectors by q_id — a plain equi-join, ≤ k·refine rows per query —
-    for one exact re-rank window with the shared (dist, id) tie order.
+    for one exact re-rank window with the shared (dist, id) tie order
+    (:func:`_coarse_rerank_df`, shared with :func:`ivfpq_search_df`).
 
     l2sq only (the SQ8 scale model is symmetric-l2; the table route
     enforces the same). Returns (q_id_col, id_col, dist); the coarse
@@ -1456,29 +1189,12 @@ def ivfsq_search_df(
     PER-ROW via the same surrogate wrap as ``ivf_search_df`` (without
     it the re-rank's join-by-q_id would also fan out across the
     duplicates); ``unique_q_ids=True`` skips the detection pass."""
-    from pyspark.sql import Window
-
-    from lanterndb_spark.functions.distance import distance
     from lanterndb_spark.operators.sq import sq8_dequantize
 
     if id_col is None:
         raise ValueError("ivfsq_search_df requires id_col (tie-break + output key)")
-    if not unique_q_ids and index.nlist > 0:
-        from lanterndb_spark.operators.hnsw import _has_duplicate_qids
-
-        if _has_duplicate_qids(queries, q_id_col):
-            return _per_row_qid_wrap(
-                lambda q: ivfsq_search_df(
-                    index, q, k=k, nprobe=nprobe, refine=refine,
-                    code_col=code_col, id_col=id_col, q_id_col=q_id_col,
-                    q_vec_col=q_vec_col, pred=pred, unique_q_ids=True,
-                    **search_params,
-                ),
-                queries, q_id_col, q_vec_col, id_col,
-            )
     code_col = code_col or f"{index.vec_col}_sq8"
     deq = sq8_dequantize(index.assigned, code_col, "__sq_deq")
-    coarse_index = IvfIndex(deq, index.centroids, "__sq_deq")
     scale_col = f"{code_col}_scale"
 
     def _sq8_decode(bpdf):
@@ -1493,45 +1209,12 @@ def ivfsq_search_df(
         X *= bpdf[scale_col].to_numpy(dtype=np.float64)[:, None]
         return X
 
-    coarse = ivf_search_df(
-        coarse_index, queries, k=k * refine, nprobe=nprobe, id_col=id_col,
-        pred=pred, q_id_col=q_id_col, q_vec_col=q_vec_col,
-        unique_q_ids=True,
-        base_decode=([code_col, scale_col], _sq8_decode),
-        **search_params,
+    return _coarse_rerank_df(
+        index, IvfIndex(deq, index.centroids, "__sq_deq"), queries, k,
+        refine, id_col, q_id_col, q_vec_col, unique_q_ids,
+        ([code_col, scale_col], _sq8_decode),
+        nprobe=nprobe, pred=pred, **search_params,
     )
-    persisted = coarse.__dict__.get("_lantern_persisted", [])
-    qslim = queries.select(
-        q_id_col, F.col(q_vec_col).cast("array<double>").alias("__qv")
-    )
-    rerank_src = index.assigned
-    probed = coarse.__dict__.get("_lantern_probed")
-    if probed is not None:
-        # keep the coarse pass's cluster pruning on the re-rank scan
-        # (candidates can only come from the probed clusters)
-        rerank_src = rerank_src.filter(F.col("cluster_id").isin(probed))
-    rescored = (
-        coarse.drop("dist")
-        .join(rerank_src.select(id_col, index.vec_col), on=id_col)
-        .join(qslim, on=q_id_col)
-        .withColumn(
-            "dist",
-            distance("l2sq", F.col(index.vec_col), F.col("__qv")).cast("double"),
-        )
-    )
-    w = Window.partitionBy(q_id_col).orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    out = (
-        rescored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(q_id_col, id_col, "dist")
-    )
-    if persisted:
-        from lanterndb_spark.plans.shape import attach_persisted
-
-        out = attach_persisted(out, *persisted)
-    return out
 
 
 def ivf_assign(index: IvfIndex, delta: DataFrame, cluster_col: str = "cluster_id") -> DataFrame:

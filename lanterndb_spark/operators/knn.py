@@ -147,9 +147,8 @@ def knn_join(
     # The driver memory ceiling is unchanged: the expr path already
     # collected the same rows into the driver-built broadcast relation,
     # the arrow path into the task closure. Duplicate/NULL q_id
-    # detection happens driver-side on the collected keys with the same
-    # semantics as _has_duplicate_qids (count_distinct skips NULLs; NaN
-    # keys compare equal to each other like Spark's aggregate).
+    # detection happens driver-side on the collected keys
+    # (_collected_qids_need_wrap, the twin of _has_duplicate_qids).
     MAX_BROADCAST_QUERIES = 100_000
     qsel_schema = queries.select(q_id_col, q_vec_col).schema
     qrows = queries.select(q_id_col, q_vec_col).limit(
@@ -166,24 +165,11 @@ def knn_join(
         )
     if not unique_q_ids and nq >= 2:
         from lanterndb_spark.operators.hnsw import (
-            _has_duplicate_qids, _restore_surrogate, _surrogate_key_queries,
+            _collected_qids_need_wrap, _restore_surrogate,
+            _surrogate_key_queries,
         )
 
-        keys = [r[0] for r in qrows]
-        nonnull = [x for x in keys if x is not None]
-        has_null = len(nonnull) != len(keys)
-        try:
-            # NaN keys: Spark's count_distinct treats all NaNs as one
-            # value; a Python set treats distinct NaN objects as
-            # distinct — count them as a single value explicitly
-            nans = sum(1 for x in nonnull if isinstance(x, float) and x != x)
-            dn = len({x for x in nonnull
-                      if not (isinstance(x, float) and x != x)})
-            has_dup = (dn + (1 if nans else 0)) != len(nonnull)
-        except TypeError:  # unhashable key type: fall back to the agg
-            has_dup = _has_duplicate_qids(queries, q_id_col)
-            has_null = False  # the aggregate covers NULLs too
-        if has_dup or has_null:
+        if _collected_qids_need_wrap([r[0] for r in qrows], queries, q_id_col):
             keyed = _surrogate_key_queries(queries, q_id_col, q_vec_col)
             inner = knn_join(
                 data, vec_col, keyed.drop("__orig_qid"), q_vec_col, k=k,

@@ -158,6 +158,20 @@ def estimated_rows(df: DataFrame) -> float | None:
         return None
 
 
+# the one known-small bound: a frame whose EXACT row count Catalyst knows
+# to be at or under this may be collected or broadcast driver-side (the
+# ANN driver routes, hnsw_insert's broadcast delta, the one-task dup check)
+KNOWN_SMALL_ROWS = 65_536
+
+
+def known_small(df: DataFrame) -> bool:
+    """True when :func:`estimated_rows` knows ``df``'s row count and it
+    is at most :data:`KNOWN_SMALL_ROWS` — driver-side, no job. Unknown
+    stats answer False (the scale-conservative default)."""
+    est = estimated_rows(df)
+    return est is not None and est <= KNOWN_SMALL_ROWS
+
+
 def coalesce_known_small(
     df: DataFrame, stats_of: DataFrame, rows_per_task: int = 1024
 ) -> DataFrame:

@@ -697,31 +697,73 @@ def test_search_df_exposes_probed_clusters(emb, index, spark):
     release(out)
 
 
-def test_ivfpq_search_df_f32_cut_matches_f64(emb, spark):
-    """The ADC kernel's f32 coarse cut + margin + exact f64 rescore must
-    emit exactly what an all-f64 pass emits — pinned by comparing the
-    partial-refine batch result against the all-f64 driver-list form on
-    many queries (any boundary divergence shows as a set mismatch)."""
+def test_ivfpq_search_df_active_cut_matches_driver_form(emb, spark):
+    """With an ACTIVE coarse cut (k·refine below the rows per cluster)
+    the batch form's decoded-matmul coarse pass must keep the same
+    candidates as the driver form's ADC LUT pass (adc_knn), so the exact
+    re-rank emits the same rows and distances — pinned on many queries
+    of the shared corpus (4 splits) and of a 160-d corpus (20 splits,
+    the >=128-d shape), where any boundary divergence shows as a set
+    mismatch."""
+    import numpy as np
+
     from lanterndb_spark.operators.ivf import build_ivfpq, ivfpq_search, ivfpq_search_df
 
+    def check(idx, corpus, ids, nprobe):
+        qdf = _qdf(corpus, ids)
+        out = ivfpq_search_df(
+            idx, idx.codebook, qdf, k=5, nprobe=nprobe, refine=2,
+            id_col="vec_id",
+        )
+        got = {}
+        for r in out.collect():
+            got.setdefault(r["q_id"], []).append(
+                (round(r["dist"], 9), r["vec_id"]))
+        for qi in ids:
+            single = [
+                (round(r["dist"], 9), r["vec_id"])
+                for r in ivfpq_search(
+                    idx, idx.codebook, qvec(corpus, qi), k=5, nprobe=nprobe,
+                    refine=2, id_col="vec_id",
+                ).collect()
+            ]
+            assert len(single) == 5 and sorted(got[qi]) == sorted(single), (
+                f"q {qi}")
+
     idx = build_ivfpq(emb, "embedding", nlist=8, splits=4, clusters=16, seed=3)
-    ids = [0, 3, 7, 11, 19, 23, 31, 44]
-    qdf = _qdf(emb, ids)
-    out = ivfpq_search_df(
-        idx, idx.codebook, qdf, k=5, nprobe=2, refine=2, id_col="vec_id"
+    check(idx, emb, [0, 3, 7, 11, 19, 23, 31, 44], nprobe=2)
+
+    # 160-d: nprobe=4 probes every cluster, refine=2 -> k·refine=10, well
+    # under the ~100 rows per cluster
+    rng = np.random.default_rng(11)
+    X = rng.standard_normal((400, 160))
+    wide = spark.createDataFrame(
+        [(i, X[i].tolist()) for i in range(400)],
+        "vec_id long, embedding array<double>",
     )
-    got = {}
-    for r in out.collect():
-        got.setdefault(r["q_id"], []).append((round(r["dist"], 9), r["vec_id"]))
-    for qi in ids:
-        single = [
-            (round(r["dist"], 9), r["vec_id"])
-            for r in ivfpq_search(
-                idx, idx.codebook, qvec(emb, qi), k=5, nprobe=2, refine=2,
-                id_col="vec_id",
-            ).collect()
-        ]
-        assert sorted(got[qi]) == sorted(single), f"q {qi}"
+    idx = build_ivfpq(wide, "embedding", nlist=4, splits=20, clusters=16, seed=42)
+    check(idx, wide, [3, 71, 205], nprobe=4)
+
+
+def test_pq_decoder_matches_dequantize(emb, spark):
+    """ivfpq_search_df's base_decode hook reproduces pq.dequantize
+    bit-exactly on a coded frame: the batch coarse pass scores the very
+    vectors the driver-side decode defines."""
+    import numpy as np
+    import pandas as pd
+
+    from lanterndb_spark.operators.ivf import _pq_decoder
+    from lanterndb_spark.operators.pq import dequantize, quantize, train_codebook
+
+    cb = train_codebook(emb, "embedding", splits=8, clusters=16, seed=42)
+    rows = dequantize(
+        quantize(emb, "embedding", cb), "embedding_pq", cb, "deq"
+    ).select("embedding_pq", "deq").collect()
+    bpdf = pd.DataFrame({"embedding_pq": [r["embedding_pq"] for r in rows]})
+    got = _pq_decoder(cb, "embedding_pq")(bpdf)
+    want = np.asarray([r["deq"] for r in rows], dtype=np.float64)
+    assert got.dtype == np.float64 and len(rows) > 0
+    assert np.array_equal(got, want)
 
 
 # ---- duplicate q_id per-row semantics (cross-backend, VERDICT r11) ----
@@ -982,55 +1024,6 @@ def test_ivfsq_arrow_kernel_decodes_codes_in_kernel(emb, index, spark):
     assert "__sq_deq" not in plan  # codes cross the boundary, not floats
 
 
-def test_ivfpq_dgemm_and_gather_cuts_bit_identical(spark, monkeypatch):
-    """The r13 dgemm coarse cut (decode-once + matmul at >=128d) and
-    the r11 f32 gather cut must emit BIT-IDENTICAL rows and distances:
-    both produce a margin superset of the exact ADC cut and the shared
-    exact f64 LUT rescore (ascending-subvector addition order) settles
-    the final set, so the dim gate is a pure speed knob. Forced by
-    patching the module gate around the same 160d corpus with an
-    active cut (kk < rows-per-cluster)."""
-    import numpy as np
-
-    import lanterndb_spark.operators.ivf as ivf_mod
-    from lanterndb_spark.operators.ivf import (
-        IvfIndex, build_ivf, ivfpq_search_df,
-    )
-    from lanterndb_spark.operators.pq import quantize, train_codebook
-
-    rng = np.random.default_rng(11)
-    dim = 160
-    X = rng.standard_normal((400, dim))
-    emb = spark.createDataFrame(
-        [(i, X[i].tolist()) for i in range(400)],
-        "vec_id long, embedding array<double>",
-    )
-    raw = build_ivf(emb, "embedding", nlist=4, seed=42)
-    cb = train_codebook(emb, "embedding", splits=20, clusters=16, seed=42)
-    idx = IvfIndex(
-        quantize(raw.assigned, "embedding", cb), raw.centroids, "embedding"
-    )
-    qdf = spark.createDataFrame(
-        [(int(i), X[i].tolist()) for i in (3, 71, 205)],
-        "q_id long, query array<double>",
-    )
-
-    def run():
-        # nprobe=4 (all clusters), refine=2 -> kk=10 < ~100 rows/cluster
-        rows = ivfpq_search_df(
-            idx, cb, qdf, k=5, nprobe=4, refine=2, id_col="vec_id",
-            unique_q_ids=True,
-        ).collect()
-        return sorted((r["q_id"], r["vec_id"], r["dist"]) for r in rows)
-
-    monkeypatch.setattr(ivf_mod, "_ADC_DGEMM_MIN_DIM", 1)  # force dgemm
-    via_dgemm = run()
-    monkeypatch.setattr(ivf_mod, "_ADC_DGEMM_MIN_DIM", 10**9)  # force gather
-    via_gather = run()
-    assert via_dgemm == via_gather  # bit-identical, not approx
-    assert len(via_dgemm) == 15
-
-
 def test_adaptive_salt_bounds_both_directions(spark):
     """r14 contract for the batch-search cogroup salt: the caller's salt
     is an UPPER BOUND. A small estimated per-cluster block derives
@@ -1136,15 +1129,18 @@ def test_search_batch_literal_kernel_matches_join_shape(tables, spark):
     idx.assigned.unpersist()
 
 
-def test_search_df_driver_route_matches_executor_route(tables, spark):
+def test_search_df_driver_route_matches_executor_route(
+    tables, spark, monkeypatch
+):
     """r15: query frames whose exact row count Catalyst knows (<= the
-    65,536 known-small bound) route on the DRIVER — same numpy argsort,
+    shape.KNOWN_SMALL_ROWS bound) route on the DRIVER — same numpy argsort,
     so rows must be identical to the executor routing path on both the
     arrow (cogroup) and expr (join) impls, for ivf AND ivfpq — with
     strictly fewer jobs, and dup/NULL q_ids still answered per row."""
     from lanterndb_spark.operators import ivf as ivfmod
     from lanterndb_spark.operators.ivf import ivf_search_df, ivfpq_search_df
     from lanterndb_spark.operators.pq import quantize, train_codebook
+    from lanterndb_spark.plans import shape
     from lanterndb_spark.plans.shape import release
 
     emb = tables["embeddings"]
@@ -1169,16 +1165,16 @@ def test_search_df_driver_route_matches_executor_route(tables, spark):
         ids = sc.statusTracker().getJobIdsForGroup()
         return rows, (max(ids) if ids else -1) - before - 1
 
+    def executor_route(body):
+        with monkeypatch.context() as m:
+            m.setattr(shape, "KNOWN_SMALL_ROWS", 0)  # force the executor path
+            return run(body)
+
     for impl in ("arrow", "expr"):
         body = lambda: ivf_search_df(
             idx, qdf, k=5, nprobe=3, id_col="vec_id", impl=impl)
         rows_d, jobs_d = run(body)
-        old = ivfmod._DRIVER_ROUTE_MAX_QUERIES
-        ivfmod._DRIVER_ROUTE_MAX_QUERIES = 0  # force the executor path
-        try:
-            rows_e, jobs_e = run(body)
-        finally:
-            ivfmod._DRIVER_ROUTE_MAX_QUERIES = old
+        rows_e, jobs_e = executor_route(body)
         assert rows_d == rows_e and rows_d, impl
         assert jobs_d < jobs_e, (impl, jobs_d, jobs_e)
 
@@ -1191,12 +1187,7 @@ def test_search_df_driver_route_matches_executor_route(tables, spark):
     body_pq = lambda: ivfpq_search_df(
         pq_idx, cb, qdf, k=5, nprobe=3, refine=3, id_col="vec_id")
     rows_d, jobs_d = run(body_pq)
-    old = ivfmod._DRIVER_ROUTE_MAX_QUERIES
-    ivfmod._DRIVER_ROUTE_MAX_QUERIES = 0
-    try:
-        rows_e, jobs_e = run(body_pq)
-    finally:
-        ivfmod._DRIVER_ROUTE_MAX_QUERIES = old
+    rows_e, jobs_e = executor_route(body_pq)
     assert rows_d == rows_e and rows_d
     assert jobs_d < jobs_e, (jobs_d, jobs_e)
 

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Interleaved A/B of ivf_search_df's driver-side routing for
 Catalyst-known-small query frames (r15) against the executor routing
-path — forced by setting _DRIVER_ROUTE_MAX_QUERIES=0, which takes
-exactly the pre-change code path. Measures the bench's ivfdf_2k and
+path — forced by setting plans.shape.KNOWN_SMALL_ROWS=0, which takes
+the pre-change routing path (it also turns off the other known-small
+gates, e.g. the one-task dup check's coalesce). Measures the bench's ivfdf_2k and
 hybriddf_256 bodies (the two bench surfaces whose inner ivf_search_df
 calls hit the gate) plus per-body job counts, and asserts row identity
 between the arms. Writes spark-warehouse/ivfdroute_ab_r15.json.
@@ -44,10 +45,10 @@ def main():
     emb = t["embeddings"]
     emb.cache().count()
 
-    from lanterndb_spark.operators import ivf as ivfmod
     from lanterndb_spark.operators.autotune import sample_queries
     from lanterndb_spark.operators.hybrid import weighted_vector_search_df
     from lanterndb_spark.operators.ivf import build_ivf, ivf_search_df
+    from lanterndb_spark.plans import shape
     from lanterndb_spark.plans.shape import release
 
     idx = build_ivf(emb, "embedding", nlist=16, seed=42)
@@ -94,19 +95,19 @@ def main():
     out_d = ivf_search_df(idx, qdf_b, k=10, nprobe=10, id_col="vec_id")
     rows_d = sorted((r[0], r[1], round(r[2], 9)) for r in out_d.collect())
     release(out_d)
-    old = ivfmod._DRIVER_ROUTE_MAX_QUERIES
-    ivfmod._DRIVER_ROUTE_MAX_QUERIES = 0
+    old = shape.KNOWN_SMALL_ROWS
+    shape.KNOWN_SMALL_ROWS = 0
     try:
         out_e = ivf_search_df(idx, qdf_b, k=10, nprobe=10, id_col="vec_id")
         rows_e = sorted((r[0], r[1], round(r[2], 9)) for r in out_e.collect())
         release(out_e)
     finally:
-        ivfmod._DRIVER_ROUTE_MAX_QUERIES = old
+        shape.KNOWN_SMALL_ROWS = old
     assert rows_d == rows_e and rows_d, "arms disagree"
 
     doc = {
         "harness": "interleaved same-session A/B; arm B forces the "
-                   "executor routing path via _DRIVER_ROUTE_MAX_QUERIES=0 "
+                   "executor routing path via shape.KNOWN_SMALL_ROWS=0 "
                    "(the pre-change code path verbatim); medians over "
                    f"{REPS} paired reps after one warm rep each",
         "rows_identical": True,
@@ -116,23 +117,23 @@ def main():
     }
     for name, body in (("ivfdf_2k", body_ivfdf), ("hybriddf_256", body_hybriddf)):
         body()
-        ivfmod._DRIVER_ROUTE_MAX_QUERIES = 0
+        shape.KNOWN_SMALL_ROWS = 0
         body()
-        ivfmod._DRIVER_ROUTE_MAX_QUERIES = old
+        shape.KNOWN_SMALL_ROWS = old
         t_d, t_e = [], []
         for _ in range(REPS):
             t0 = time.monotonic(); body(); t_d.append(round(time.monotonic() - t0, 3))
-            ivfmod._DRIVER_ROUTE_MAX_QUERIES = 0
+            shape.KNOWN_SMALL_ROWS = 0
             try:
                 t0 = time.monotonic(); body(); t_e.append(round(time.monotonic() - t0, 3))
             finally:
-                ivfmod._DRIVER_ROUTE_MAX_QUERIES = old
+                shape.KNOWN_SMALL_ROWS = old
         j_d = njobs(body)
-        ivfmod._DRIVER_ROUTE_MAX_QUERIES = 0
+        shape.KNOWN_SMALL_ROWS = 0
         try:
             j_e = njobs(body)
         finally:
-            ivfmod._DRIVER_ROUTE_MAX_QUERIES = old
+            shape.KNOWN_SMALL_ROWS = old
         doc["surfaces"][name] = {
             "driver_route_s": statistics.median(t_d), "samples_driver": t_d,
             "executor_route_s": statistics.median(t_e), "samples_executor": t_e,
