@@ -2008,9 +2008,18 @@ def _surrogate_key_queries(
 
 
 def _has_duplicate_qids(queries: DataFrame, q_id_col: str) -> bool:
-    """One column-pruned aggregate over the id column. Used by the
-    integral fast path to decide whether the merge-by-key shortcut is
-    safe; callers that mint their own ids skip it via unique_q_ids.
+    """One column-pruned aggregate over the id column: True when the
+    frame holds a duplicate or NULL q_id, so a merge-by-key batch route
+    must take the per-row surrogate wrap. A standalone action, so the
+    batch ANN searches avoid it where a pass they run anyway can answer
+    (collected keys: :func:`_collected_qids_need_wrap`; ivf's prune
+    rollup; hnsw's inline occurrence key). Callers: ``ivf_search_df``
+    and the ivfsq/ivfpq composites only with no such pass
+    (``prune=False`` or nprobe ≥ nlist), ``hnsw_search_df`` on its pq
+    re-rank path, ``hnsw_search_df_filtered``, hybrid's batch,
+    ``LanternTable.knn_batch``, and the unhashable-key fallback of
+    :func:`_collected_qids_need_wrap`. Callers that mint their own ids
+    skip it via unique_q_ids.
     NULL keys count too: count/count_distinct both skip NULLs, so
     NULL-keyed rows would otherwise slip past detection — and ANY
     NULL key (even a single one) must take the surrogate wrap, because
@@ -2123,13 +2132,19 @@ def hnsw_search_df(
     one extra equi-join (the scan contract is label-agnostic — TIDs,
     scan.c:302-308 — so the batch form is too). Duplicate q_id VALUES
     are PER-ROW on every path (each input row keeps its own top-k,
-    the lateral-join semantics a SQL batch would have): integral
-    frames pay one column-pruned count to detect duplicates and fall
-    into the surrogate wrap when they exist, so the result no longer
-    depends on the key dtype. Callers that mint their own unique ids
-    pass ``unique_q_ids=True`` to skip that check (asserting
-    uniqueness — with duplicates present it silently merges their
-    candidate sets). cos queries with zero norm are DROPPED (undefined
+    the lateral-join semantics a SQL batch would have), and no path
+    pays a standalone detection job for it: the driver route checks
+    the keys it collects and takes the surrogate wrap on a duplicate
+    or NULL key; the executor route keys each row by an inline
+    occurrence number (one window in the query-side stage, the
+    ``search_bm25_df`` pattern), so duplicate and NULL q_ids answer
+    per row and NULLs come back NULL. Only the pq re-rank
+    (``quant='pq'`` with ``base``), which re-reads ``queries`` joined
+    by q_id, keeps one column-pruned detection aggregate before the
+    wrap. The result does not depend on the key dtype. Callers that
+    mint their own unique ids pass ``unique_q_ids=True`` to skip the
+    per-row keying (asserting uniqueness — with duplicates present it
+    silently merges their candidate sets). cos queries with zero norm are DROPPED (undefined
     angle, distance.py's NULL convention). Reference parity:
     scan.c:167-238 is per-query; this is the batch recast that scales
     it.
@@ -2152,9 +2167,9 @@ def hnsw_search_df(
     integral = (
         queries.schema[q_id_col].dataType.simpleString() in _INTEGRAL_TYPES
     )
-    if not integral or (
-        not unique_q_ids and _has_duplicate_qids(queries, q_id_col)
-    ):
+    rerank = index.quant == "pq" and base is not None
+
+    def _wrap():
         keyed = _surrogate_key_queries(queries, q_id_col, q_vec_col)
         inner = hnsw_search_df(
             index, keyed.drop("__orig_qid"), k=k, ef=ef, deleted=deleted,
@@ -2163,7 +2178,15 @@ def hnsw_search_df(
             broadcast_queries=broadcast_queries,
         )
         return _restore_surrogate(inner, keyed, q_id_col, [index.id_col, "dist"])
-    rerank = index.quant == "pq" and base is not None
+
+    # the pq re-rank re-reads ``queries`` joined by q_id, where duplicate
+    # keys would fan out: that path keeps the standalone check
+    if not integral or (
+        rerank and not unique_q_ids
+        and _has_duplicate_qids(queries, q_id_col)
+    ):
+        return _wrap()
+    per_row = not unique_q_ids and not rerank
     kk = k * 8 if rerank else k
     ef = max(ef, kk)
     dead = frozenset(int(i) for i in deleted) if deleted else None
@@ -2192,6 +2215,15 @@ def hnsw_search_df(
         qrows = queries.select(
             F.col(q_id_col).cast("long"), F.col(q_vec_col)
         ).collect()
+        if per_row:
+            if _collected_qids_need_wrap(
+                [r[0] for r in qrows], queries, q_id_col
+            ):
+                # broadcast_queries is True by now: the keyed frame is
+                # as small as this one, so the wrapped call stays on the
+                # driver route too
+                return _wrap()
+            per_row = False
         if qrows:
             raw = [list(r[1]) for r in qrows]
             qids0 = np.empty(len(qrows), dtype=object)
@@ -2245,11 +2277,30 @@ def hnsw_search_df(
         # shape, which evaluates the (empty) lineage into the same
         # empty result frame
 
+    # per-row keys on the executor route (the search_bm25_df pattern,
+    # no detection job): rows key on (coalesce(q_id, 0), __occ), where
+    # __occ numbers each row among equal q_id values (NULLs form one
+    # window group) and is negated for NULL q_ids, so both parts are
+    # non-NULL int64/int32 the kernels can carry. Ordering by the vector
+    # keeps the numbering retry-stable: rows with equal (q_id, vector)
+    # have equal answers. The final window keys on the pair and the
+    # JVM restores the NULL q_ids.
+    occ = ["__occ"] if per_row else []
+    occ_ddl = "".join(f"{c} int, " for c in occ)
+    qkeys = ["q_id", *occ]
     if routed is None:
-        qsel = queries.select(
-            F.col(q_id_col).cast("long").alias("__qid"),
-            F.col(q_vec_col).alias("__q"),
-        )
+        qid = F.col(q_id_col).cast("long")
+        if per_row:
+            n = F.row_number().over(
+                Window.partitionBy(q_id_col).orderBy(q_vec_col)
+            )
+            kcols = [
+                F.coalesce(qid, F.lit(0)).alias("__qid"),
+                F.when(qid.isNull(), -n).otherwise(n).alias("__occ"),
+            ]
+        else:
+            kcols = [qid.alias("__qid")]
+        qsel = queries.select(*kcols, F.col(q_vec_col).alias("__q"))
         # known-small query batches prep/route in a few big Python
         # tasks instead of one near-empty task per input partition
         # (stats-driven, no job; large/unknown inputs keep their
@@ -2258,54 +2309,58 @@ def hnsw_search_df(
 
         qsel = coalesce_known_small(qsel, queries)
 
+        kdf_cols = ["__qid", *occ]
+
         def prep_block(pdf: pd.DataFrame):
-            """(qids int64, prepped float64 matrix) per arrow batch."""
-            qids = pdf["__qid"].to_numpy()
+            """(key columns, prepped float64 matrix) per arrow batch."""
+            keys = pdf[kdf_cols]
             raw = pdf["__q"].tolist()
             if metric == "hamming":
-                return qids, _bits_rows(raw)
+                return keys, _bits_rows(raw)
             Qp = np.asarray(raw, dtype=np.float64)
             if metric == "cos":
-                return _norm_rows(qids, Qp)
-            return qids, Qp
+                live, Qp = _norm_rows(np.arange(len(keys)), Qp)
+                return keys.iloc[live], Qp
+            return keys, Qp
 
         if routed_probe:
             def route(batches):
                 for pdf in batches:
-                    qids, Qp = prep_block(pdf)
-                    if not len(qids):
+                    keys, Qp = prep_block(pdf)
+                    if not len(keys):
                         continue
                     # block the centroid scoring so the (B, S) distance
                     # matrix stays <=~256 MB even at millions of shards
                     blk = max(1, (1 << 25) // max(len(cents), 1))
                     cn = np.einsum("sd,sd->s", cents, cents)
-                    for s in range(0, len(qids), blk):
+                    for s in range(0, len(keys), blk):
                         Qb = Qp[s:s + blk]
                         d = cn[None, :] - 2.0 * (Qb @ cents.T)
                         sh = np.argpartition(
                             d, np_eff - 1, axis=1)[:, :np_eff]
                         B = len(Qb)
-                        yield pd.DataFrame({
-                            "__qid": np.repeat(qids[s:s + blk], np_eff),
-                            "__q": [Qb[i].tolist() for i in range(B)
-                                    for _ in range(np_eff)],
-                            "__shard": sh.reshape(-1).astype(np.int32),
-                        })
+                        rows = np.repeat(np.arange(s, s + B), np_eff)
+                        out = {c: keys[c].to_numpy()[rows] for c in kdf_cols}
+                        out["__q"] = [Qb[i].tolist() for i in range(B)
+                                      for _ in range(np_eff)]
+                        out["__shard"] = sh.reshape(-1).astype(np.int32)
+                        yield pd.DataFrame(out)
 
             routed = qsel.mapInPandas(
-                route, "__qid long, __q array<double>, __shard int"
+                route, f"__qid long, {occ_ddl}__q array<double>, __shard int"
             )
         else:
             def prep(batches):
                 for pdf in batches:
-                    qids, Qp = prep_block(pdf)
-                    if len(qids):
-                        yield pd.DataFrame({
-                            "__qid": qids,
-                            "__q": [r.tolist() for r in Qp],
-                        })
+                    keys, Qp = prep_block(pdf)
+                    if len(keys):
+                        out = {c: keys[c].to_numpy() for c in kdf_cols}
+                        out["__q"] = [r.tolist() for r in Qp]
+                        yield pd.DataFrame(out)
 
-            prepped = qsel.mapInPandas(prep, "__qid long, __q array<double>")
+            prepped = qsel.mapInPandas(
+                prep, f"__qid long, {occ_ddl}__q array<double>"
+            )
             # hash routing / full probe: every query visits every
             # existing shard — the fan-out is declarative (broadcast of
             # the tiny shard-id list), never a driver collect
@@ -2314,13 +2369,14 @@ def hnsw_search_df(
                     index.graphs.select(F.col("shard").alias("__shard")))
             )
 
+    cand_ddl = f"q_id long, {occ_ddl}__gid bigint, dist double"
+    empty_cand = {"q_id": "int64", **dict.fromkeys(occ, "int32"),
+                  "__gid": "int64", "dist": "float64"}
+
     def run_shard(key, gpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
         if not len(gpdf) or not len(qpdf):
             return pd.DataFrame(
-                {"q_id": pd.Series(dtype="int64"),
-                 "__gid": pd.Series(dtype="int64"),
-                 "dist": pd.Series(dtype="float64")}
-            )
+                {c: pd.Series(dtype=t) for c, t in empty_cand.items()})
         g = _graph_from_blob_cached(gpdf["blob"].iloc[0])
         if qbc is not None:
             qk_, qm_ = qbc.value
@@ -2339,20 +2395,18 @@ def hnsw_search_df(
         cnts = np.asarray([len(x) for x in ids_l], dtype=np.int64)
         if not cnts.sum():
             return pd.DataFrame(
-                {"q_id": pd.Series(dtype="int64"),
-                 "__gid": pd.Series(dtype="int64"),
-                 "dist": pd.Series(dtype="float64")}
-            )
-        return pd.DataFrame({
-            "q_id": np.repeat(qids, cnts),
-            "__gid": np.concatenate(ids_l),
-            "dist": np.concatenate([ds[:kk] for _, ds in results]) * scale,
-        })
+                {c: pd.Series(dtype=t) for c, t in empty_cand.items()})
+        out = {"q_id": np.repeat(qids, cnts)}
+        for c in occ:
+            out[c] = np.repeat(qpdf[c].to_numpy(), cnts)
+        out["__gid"] = np.concatenate(ids_l)
+        out["dist"] = np.concatenate([ds[:kk] for _, ds in results]) * scale
+        return pd.DataFrame(out)
 
     cand = (
         index.graphs.groupBy("shard")
         .cogroup(routed.groupBy("__shard"))
-        .applyInPandas(run_shard, "q_id long, __gid bigint, dist double")
+        .applyInPandas(run_shard, cand_ddl)
     )
 
     def partial_topk(batches):
@@ -2366,41 +2420,51 @@ def hnsw_search_df(
         allpdf = chunks[0] if len(chunks) == 1 else pd.concat(
             chunks, ignore_index=True
         )
-        q = allpdf["q_id"].to_numpy()
+        # key columns, major first (lexsort's primary key is its last)
+        q = [allpdf[c].to_numpy() for c in qkeys]
         d = allpdf["dist"].to_numpy()
         gid = allpdf["__gid"].to_numpy()
+
+        def changed(*cols):
+            return np.logical_or.reduce([c[1:] != c[:-1] for c in cols])
+
         if replicated:
             # replicas > 1: the same (q, id) can arrive from several
             # overlapping shards IN THIS PARTITION; merge to min dist
             # first, or duplicates occupy top-kk slots and push a true
             # candidate below the cut (the partition supersets would
             # no longer cover the global top-kk)
-            order = np.lexsort((d, gid, q))
-            q, d, gid = q[order], d[order], gid[order]
-            first = np.r_[True, (q[1:] != q[:-1]) | (gid[1:] != gid[:-1])]
-            q, d, gid = q[first], d[first], gid[first]
-        order = np.lexsort((gid, d, q))
-        q, d, gid = q[order], d[order], gid[order]
-        starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
-        runs = np.diff(np.r_[starts, len(q)])
-        rank = np.arange(len(q)) - np.repeat(starts, runs)
+            order = np.lexsort((d, gid, *q[::-1]))
+            q, d, gid = [c[order] for c in q], d[order], gid[order]
+            first = np.r_[True, changed(*q, gid)]
+            q, d, gid = [c[first] for c in q], d[first], gid[first]
+        order = np.lexsort((gid, d, *q[::-1]))
+        q, d, gid = [c[order] for c in q], d[order], gid[order]
+        starts = np.flatnonzero(np.r_[True, changed(*q)])
+        runs = np.diff(np.r_[starts, len(d)])
+        rank = np.arange(len(d)) - np.repeat(starts, runs)
         keep = rank < kk
-        yield pd.DataFrame({"q_id": q[keep], "__gid": gid[keep],
-                            "dist": d[keep]})
+        out = {c: x[keep] for c, x in zip(qkeys, q)}
+        out["__gid"] = gid[keep]
+        out["dist"] = d[keep]
+        yield pd.DataFrame(out)
 
-    cand = cand.mapInPandas(partial_topk, "q_id long, __gid bigint, dist double")
+    cand = cand.mapInPandas(partial_topk, cand_ddl)
     if replicated:
         # cross-partition copies of a (q, id) pair survive the
         # combiner; one global merge keeps the min-dist copy so the
         # rank window below never double-counts an id
-        cand = cand.groupBy("q_id", "__gid").agg(F.min("dist").alias("dist"))
-    w = Window.partitionBy("q_id").orderBy(
+        cand = cand.groupBy(*qkeys, "__gid").agg(F.min("dist").alias("dist"))
+    w = Window.partitionBy(*qkeys).orderBy(
         F.col("dist").asc(), F.col("__gid").asc()
     )
+    q_out = F.col("q_id")
+    if per_row:
+        q_out = F.when(F.col("__occ") > 0, q_out).alias("q_id")
     top = (
         cand.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= kk)
-        .select("q_id", F.col("__gid").alias(index.id_col), "dist")
+        .select(q_out, F.col("__gid").alias(index.id_col), "dist")
     )
     if not rerank:
         return top

@@ -548,14 +548,16 @@ def ivf_search_df(
     rows only). Returns (q_id_col, id_col, dist) — ``id_col`` is
     required (it is the deterministic tie-break and keeps the combiner
     schema skinny). Duplicate q_id VALUES are PER-ROW, matching the
-    hnsw forms (each input row keeps its own top-k): the frame pays
-    one column-pruned count to detect duplicates and falls into the
-    same surrogate wrap ``hnsw_search_df`` uses when they exist, so
-    ``LanternTable.knn_batch`` returns the same row count whichever
-    index kind routes the call. Callers that mint their own unique ids
-    pass ``unique_q_ids=True`` to skip the check (asserting uniqueness
-    — with duplicates present it silently merges their candidate
-    sets, the pre-r12 behavior).
+    hnsw forms (each input row keeps its own top-k): duplicates are
+    detected from the keys the driver route collects, or in the prune
+    rollup on the executor route (a call with neither — ``prune=False``
+    or nprobe ≥ nlist — pays one column-pruned aggregate), and the
+    frame falls into the same surrogate wrap ``hnsw_search_df`` uses
+    when they exist, so ``LanternTable.knn_batch`` returns the same
+    row count whichever index kind routes the call. Callers that mint
+    their own unique ids pass ``unique_q_ids=True`` to skip the check
+    (asserting uniqueness — with duplicates present it silently merges
+    their candidate sets, the pre-r12 behavior).
 
     The queries lineage is evaluated ONCE: with ``prune`` on, the routed
     frame is persisted and the prune stats (which also decide the
@@ -579,6 +581,45 @@ def ivf_search_df(
     must still exist on ``index.assigned`` for it; ivfpq forces
     ``impl='arrow'``). ``fn`` must reproduce the vec_col values
     bit-exactly or the two impls diverge."""
+    params = dict(
+        k=k, nprobe=nprobe, metric=metric, id_col=id_col, pred=pred,
+        q_id_col=q_id_col, q_vec_col=q_vec_col, prune=prune, impl=impl,
+        salt=salt, base_decode=base_decode,
+    )
+    out, needs_wrap = _ivf_search_df(
+        index, queries, unique_q_ids=unique_q_ids, **params
+    )
+    if not needs_wrap:
+        return out
+    return _per_row_qid_wrap(
+        lambda q: _ivf_search_df(index, q, unique_q_ids=True, **params)[0],
+        queries, q_id_col, q_vec_col, id_col,
+    )
+
+
+def _ivf_search_df(
+    index: IvfIndex,
+    queries: DataFrame,
+    k: int = 10,
+    nprobe: int = 4,
+    metric: str = "l2sq",
+    id_col: str | None = None,
+    pred: Column | None = None,
+    q_id_col: str = "q_id",
+    q_vec_col: str = "query",
+    prune: bool = True,
+    impl: str = "auto",
+    salt: int = 8,
+    unique_q_ids: bool = False,
+    base_decode: tuple | None = None,
+) -> tuple[DataFrame | None, bool]:
+    """Body of :func:`ivf_search_df`: returns ``(result, False)``, or
+    ``(None, True)`` when ``unique_q_ids`` is False and the frame holds a
+    duplicate or NULL q_id. The caller then takes the per-row surrogate
+    wrap around whatever it composes on top of this pass (ivf_search_df
+    around itself, :func:`_coarse_rerank_df` around the coarse pass AND
+    its re-rank), so the check rides this pass's own collect or prune
+    rollup instead of a standalone action."""
     from pyspark.sql import Window
 
     from lanterndb_spark.functions.distance import distance
@@ -598,19 +639,8 @@ def ivf_search_df(
         # empty build (ldb_ambuildunlogged analogue): valid index, empty answer
         return spark.createDataFrame(
             [], f"{q_id_col} {q_id_type}, {id_col} {id_type}, dist double"
-        )
+        ), False
     np_eff = min(int(nprobe), index.nlist)
-
-    def _wrap():
-        return _per_row_qid_wrap(
-            lambda q: ivf_search_df(
-                index, q, k=k, nprobe=nprobe, metric=metric,
-                id_col=id_col, pred=pred, q_id_col=q_id_col,
-                q_vec_col=q_vec_col, prune=prune, impl=impl,
-                salt=salt, unique_q_ids=True, base_decode=base_decode,
-            ),
-            queries, q_id_col, q_vec_col, id_col,
-        )
 
     # KNOWN-SMALL query frames route on the DRIVER (r15, guide §4/§5 —
     # the same single-collect pattern as knn_join's capped collect):
@@ -640,12 +670,12 @@ def ivf_search_df(
                 )
 
                 if _collected_qids_need_wrap(keys, queries, q_id_col):
-                    return _wrap()
+                    return None, True
             if not qrows:
                 return spark.createDataFrame(
                     [], f"{q_id_col} {q_id_type}, {id_col} {id_type}, "
                         "dist double"
-                )
+                ), False
             qarr = np.asarray([list(r[1]) for r in qrows], dtype=np.float64)
             probes = _route_probes(index.centroids, qarr, np_eff)
             droute = (keys, qarr, probes)
@@ -665,7 +695,7 @@ def ivf_search_df(
         from lanterndb_spark.operators.hnsw import _has_duplicate_qids
 
         if _has_duplicate_qids(queries, q_id_col):
-            return _wrap()
+            return None, True
     routed = None
     if droute is None:
         bc = spark.sparkContext.broadcast(index.centroids)
@@ -732,7 +762,7 @@ def ivf_search_df(
             total = next((r for r in rows if r["cluster_id"] is None), None)
             if total is not None and total["dq"] * np_eff != total["cnt"]:
                 cached_routed.unpersist()
-                return _wrap()
+                return None, True
         else:
             probed_stats = (
                 cached_routed.groupBy("cluster_id")
@@ -936,7 +966,7 @@ def ivf_search_df(
         # (ivfsq_search_df's exact re-rank) can keep the coarse pass's
         # partition pruning instead of re-scanning the full table
         out.__dict__["_lantern_probed"] = probed
-    return out
+    return out, False
 
 
 def _coarse_rerank_df(
@@ -956,14 +986,19 @@ def _coarse_rerank_df(
     :func:`ivfpq_search_df`), which differ only in ``coarse_index`` and
     ``base_decode``:
 
-    1. per-row q_id prologue — duplicate or NULL q_id VALUES take the
-       same surrogate wrap as ``ivf_search_df`` (without it the
-       re-rank's join-by-q_id would also fan out across the duplicates
-       and drop NULL keys); ``unique_q_ids=True`` skips the check;
-    2. coarse — ONE :func:`ivf_search_df` pass over ``coarse_index``
+    1. coarse — ONE :func:`ivf_search_df` pass over ``coarse_index``
        for the top ``k·refine`` per query, whose arrow kernel decodes
-       ``base_decode``'s code columns in numpy;
-    3. re-rank — candidates join the raw base rows by id (restricted to
+       ``base_decode``'s code columns in numpy. The pass also answers
+       the per-row q_id question without a standalone action
+       (:func:`_ivf_search_df`): from the keys its driver route
+       collects, or in its prune rollup on the executor route; only a
+       call with no such pass (``prune=False``, or nprobe ≥ nlist)
+       runs the standalone check. Duplicate or NULL q_id VALUES then
+       take the same surrogate wrap as ``ivf_search_df``, around the
+       coarse pass AND the re-rank (without it the re-rank's
+       join-by-q_id would fan out across the duplicates and drop NULL
+       keys); ``unique_q_ids=True`` skips the check;
+    2. re-rank — candidates join the raw base rows by id (restricted to
        the coarse pass's probed clusters, keeping its partition
        pruning) and their ORIGINAL query vectors by q_id (≤ k·refine
        rows per query), then one exact l2sq window with the shared
@@ -975,22 +1010,19 @@ def _coarse_rerank_df(
 
     from lanterndb_spark.functions.distance import distance
 
-    if not unique_q_ids and index.nlist > 0:
-        from lanterndb_spark.operators.hnsw import _has_duplicate_qids
-
-        if _has_duplicate_qids(queries, q_id_col):
-            return _per_row_qid_wrap(
-                lambda q: _coarse_rerank_df(
-                    index, coarse_index, q, k, refine, id_col, q_id_col,
-                    q_vec_col, True, base_decode, **search_params,
-                ),
-                queries, q_id_col, q_vec_col, id_col,
-            )
-    coarse = ivf_search_df(
+    coarse, needs_wrap = _ivf_search_df(
         coarse_index, queries, k=k * refine, id_col=id_col,
-        q_id_col=q_id_col, q_vec_col=q_vec_col, unique_q_ids=True,
+        q_id_col=q_id_col, q_vec_col=q_vec_col, unique_q_ids=unique_q_ids,
         base_decode=base_decode, **search_params,
     )
+    if needs_wrap:
+        return _per_row_qid_wrap(
+            lambda q: _coarse_rerank_df(
+                index, coarse_index, q, k, refine, id_col, q_id_col,
+                q_vec_col, True, base_decode, **search_params,
+            ),
+            queries, q_id_col, q_vec_col, id_col,
+        )
     persisted = coarse.__dict__.get("_lantern_persisted", [])
     qslim = queries.select(
         q_id_col, F.col(q_vec_col).cast("array<double>").alias("__qv")

@@ -14,6 +14,11 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+# the directory holding this package, put on the Python workers' path
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
+
 
 def get_spark(
     app_name: str = "lanterndb-spark",
@@ -21,6 +26,23 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """Build (or return the active) local session with the defaults in
+    the module docstring; ``extra_conf`` entries override them.
+
+    Python workers fork from :mod:`lanterndb_spark.pydaemon` instead of
+    ``pyspark.daemon``. PySpark's worker calls
+    ``importlib.invalidate_caches()`` on every task, and on CPython 3.11
+    that re-reads the central directory of every cached zip archive on
+    the path (``pyspark.zip`` a dozen times, the Spark core jar twice):
+    130-330 ms per task, more than an identity ``mapInPandas`` over 200
+    rows costs in total. The daemon skips re-reads of unchanged
+    archives. It is started as ``python -m lanterndb_spark.pydaemon``, so
+    the workers must be able to import this package, as the library's
+    UDFs, pickled by reference, need anyway: ``spark.executorEnv.
+    PYTHONPATH`` holds the directory this package sits in, whatever the
+    driver's working directory (a caller overriding it must keep the
+    package importable). Pass ``extra_conf={"spark.python.daemon.
+    module": "pyspark.daemon"}`` to get the stock daemon back."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0)
     if master is None:
         master = f"local[{cpus}]" if cpus else "local[*]"
@@ -46,6 +68,12 @@ def get_spark(
         # thrash caches during numpy-heavy stages (hnsw build, k-means)
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
+        # workers fork from a daemon that stops the per-task zip
+        # directory re-reads (see pydaemon.py and the docstring); the
+        # daemon, like the library's by-reference UDFs, imports this
+        # package in the workers whatever the driver's working directory
+        .config("spark.python.daemon.module", "lanterndb_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1002,6 +1002,92 @@ def test_search_df_duplicate_q_ids_per_row_every_dtype(index, emb, spark):
     assert len(merged) == 10
 
 
+def _per_row_key(rows):
+    return sorted(
+        (str(r["q_id"]), r["vec_id"], round(r["dist"], 9)) for r in rows
+    )
+
+
+def _long_and_string(spark, rows):
+    """The same (q_id, query) rows keyed by long and by string (the
+    string frame always takes the surrogate wrap: the reference answer)."""
+    ldf = spark.createDataFrame(rows, "q_id long, query array<double>")
+    sdf = spark.createDataFrame(
+        [(None if q is None else str(q), v) for q, v in rows],
+        "q_id string, query array<double>",
+    )
+    return ldf, sdf
+
+
+def test_search_df_duplicate_null_q_ids_executor_route(index, ridx, emb, spark):
+    """The executor route (``broadcast_queries=False``) keys each row by
+    an inline occurrence number: duplicate integral q_ids (same or
+    different vectors) and NULL q_ids answer exactly what the same rows
+    under string keys answer, NULL labels restored. Covers the hash-
+    routed full probe and the cluster-routed replicated probe."""
+    from lanterndb_spark.operators.hnsw import hnsw_search_df
+
+    qa, qb, qc, qd = (qvec(emb, i) for i in (1, 29, 44, 5))
+    rows = [(7, qa), (7, qb), (7, qa), (None, qc), (None, qd), (3, qc)]
+    ldf, sdf = _long_and_string(spark, rows)
+    for idx, kw in ((index, {}), (ridx, {"nprobe": 2})):
+        got = hnsw_search_df(
+            idx, ldf, k=5, ef=32, broadcast_queries=False, **kw
+        ).collect()
+        exp = hnsw_search_df(idx, sdf, k=5, ef=32, **kw).collect()
+        assert len(got) == 30  # 6 input rows x k
+        assert _per_row_key(got) == _per_row_key(exp)
+    # unique keys: the same rows with or without the occurrence key
+    uniq = spark.createDataFrame(
+        [(i, v) for i, (_, v) in enumerate(rows)],
+        "q_id long, query array<double>",
+    )
+    assert sorted(hnsw_search_df(
+        index, uniq, k=5, ef=32, broadcast_queries=False
+    ).collect()) == sorted(hnsw_search_df(
+        index, uniq, k=5, ef=32, broadcast_queries=False, unique_q_ids=True
+    ).collect())
+
+
+def test_search_df_cos_zero_norm_query_executor_route(spark):
+    """A zero-norm cos query is dropped from the per-row keys too: the
+    duplicate key's other row keeps its answer."""
+    from lanterndb_spark.operators.hnsw import hnsw_search_df
+
+    base = spark.createDataFrame(
+        [(i, [float(i + 1), 1.0]) for i in range(20)],
+        "vec_id long, embedding array<float>",
+    )
+    idx = build_hnsw(base, "embedding", id_col="vec_id", num_shards=2,
+                     seed=1, metric="cos")
+    rows = [(5, [0.0, 0.0]), (5, [1.0, 2.0]), (None, [3.0, 1.0])]
+    ldf, sdf = _long_and_string(spark, rows)
+    got = hnsw_search_df(
+        idx, ldf, k=3, ef=40, broadcast_queries=False).collect()
+    exp = hnsw_search_df(idx, sdf, k=3, ef=40).collect()
+    assert len(got) == 6
+    assert _per_row_key(got) == _per_row_key(exp)
+    idx.graphs.unpersist()
+
+
+def test_search_df_dup_path_runs_no_extra_job(index, emb, spark, job_ids):
+    """On the executor route the per-row answer is plan-inline: a frame
+    with duplicate and NULL keys runs exactly as many jobs as a frame
+    with unique keys (no detection action, no checkpoint)."""
+    from lanterndb_spark.operators.hnsw import hnsw_search_df
+
+    qa, qb, qc = qvec(emb, 1), qvec(emb, 29), qvec(emb, 44)
+
+    def njobs(rows):
+        qdf = spark.createDataFrame(rows, "q_id long, query array<double>")
+        _, jobs = job_ids(lambda: hnsw_search_df(
+            index, qdf, k=5, ef=32, broadcast_queries=False).collect())
+        return len(jobs)
+
+    assert njobs([(7, qa), (7, qb), (None, qc)]) == njobs(
+        [(0, qa), (1, qb), (2, qc)])
+
+
 def test_surrogate_checkpoint_blocks_released(index, emb, spark):
     """release() frees the surrogate wrap's localCheckpoint blocks:
     DataFrame.unpersist() alone leaves them (the r10 leak), so the wrap

@@ -984,6 +984,110 @@ def test_single_null_q_id_not_dropped(emb, index, spark):
         assert vals(got) == vals(run(ref).collect()), name
 
 
+def _unsized(spark, tmp_path, name, rows, ddl):
+    """A query frame read back from parquet: Catalyst has no row count
+    for it, so the batch searches take the executor route."""
+    from lanterndb_spark.plans.shape import known_small
+
+    path = str(tmp_path / name)
+    spark.createDataFrame(rows, ddl).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert not known_small(df)
+    return df
+
+
+def _coded(emb, index):
+    """(sq8 index, pq index, codebook) over the shared ivf assignment."""
+    from lanterndb_spark.operators.ivf import IvfIndex
+    from lanterndb_spark.operators.pq import quantize, train_codebook
+    from lanterndb_spark.operators.sq import sq8_quantize
+
+    sq_idx = IvfIndex(
+        sq8_quantize(index.assigned, "embedding"), index.centroids, "embedding"
+    )
+    cb = train_codebook(emb, "embedding", splits=8, clusters=16, seed=42)
+    pq_idx = IvfIndex(
+        quantize(index.assigned, "embedding", cb), index.centroids, "embedding"
+    )
+    return sq_idx, pq_idx, cb
+
+
+def test_duplicate_null_q_ids_per_row_executor_route(emb, index, spark, tmp_path):
+    """The per-row contract on the EXECUTOR route with a prune pass
+    (nprobe < nlist), where the duplicate check rides the prune rollup
+    and the coded forms wrap the coarse pass and the re-rank together:
+    duplicate and NULL keys answer exactly what minted unique ids
+    answer."""
+    from lanterndb_spark.operators.ivf import (
+        ivf_search_df, ivfpq_search_df, ivfsq_search_df,
+    )
+
+    qa, qb, qc = qvec(emb, 1), qvec(emb, 9), qvec(emb, 17)
+    ddl = "q_id long, query array<double>"
+    dup = _unsized(spark, tmp_path, "dup", [
+        (7, qa), (7, qb), (None, qc), (None, qa), (3, qb)], ddl)
+    uniq = _unsized(spark, tmp_path, "uniq", [
+        (0, qa), (1, qb), (2, qc), (4, qa), (3, qb)], ddl)
+    remap = {0: 7, 1: 7, 2: None, 4: None}
+
+    def key(rows, rm=None):
+        return sorted(
+            (str(rm.get(r["q_id"], r["q_id"]) if rm else r["q_id"]),
+             r["vec_id"], round(r["dist"], 9))
+            for r in rows
+        )
+
+    sq_idx, pq_idx, cb = _coded(emb, index)
+    for name, run in (
+        ("ivf", lambda q: ivf_search_df(
+            index, q, k=5, nprobe=4, id_col="vec_id")),
+        ("ivfsq", lambda q: ivfsq_search_df(
+            sq_idx, q, k=5, nprobe=4, refine=4, id_col="vec_id")),
+        ("ivfpq", lambda q: ivfpq_search_df(
+            pq_idx, cb, q, k=5, nprobe=4, refine=4, id_col="vec_id")),
+    ):
+        got = run(dup).collect()
+        assert len(got) == 25, name  # 5 input rows x k
+        assert key(got) == key(run(uniq).collect(), remap), name
+
+
+def test_ivfpq_search_df_dup_check_costs_at_most_one_job(
+    emb, index, spark, tmp_path, job_ids
+):
+    """unique_q_ids=False on a unique frame: the executor route folds
+    the check into the coarse pass's prune rollup (at most one job over
+    unique_q_ids=True, not a standalone multi-job action), and the
+    driver route of a cached frame answers it from its collect (no job
+    at all)."""
+    from lanterndb_spark.operators.ivf import ivfpq_search_df
+
+    _, pq_idx, cb = _coded(emb, index)
+    qdf = _unsized(
+        spark, tmp_path, "q",
+        [(i, qvec(emb, i)) for i in range(1, 13)],
+        "q_id long, query array<double>",
+    )
+
+    def run(q, unique):
+        return job_ids(lambda: sorted(ivfpq_search_df(
+            pq_idx, cb, q, k=5, nprobe=4, refine=4, id_col="vec_id",
+            unique_q_ids=unique,
+        ).collect()))
+
+    rows_t, jobs_t = run(qdf, True)
+    rows_f, jobs_f = run(qdf, False)
+    assert rows_f == rows_t
+    assert len(jobs_f) <= len(jobs_t) + 1
+
+    cached = qdf.cache()
+    cached.count()
+    rows_t, jobs_t = run(cached, True)
+    rows_f, jobs_f = run(cached, False)
+    assert rows_f == rows_t
+    assert len(jobs_f) == len(jobs_t)
+    cached.unpersist()
+
+
 def test_ivfsq_arrow_kernel_decodes_codes_in_kernel(emb, index, spark):
     """The sq8 coarse pass ships CODES through the Arrow boundary and
     decodes in the kernel (r13): serializing the Catalyst-dequantized

@@ -2,8 +2,8 @@
 """Count Spark JOBS per bench query + per streaming micro-batch —
 noise-free structural evidence for the r15 optimization round (job ids
 are sequential; a no-op marker job before/after each body brackets its
-count). Batch surfaces mirror bench.py's query bodies (same harness as
-tools/jobcount_r14.py); the streaming block drives each handle's
+count). Batch surfaces mirror bench.py's query bodies (the r14 batch
+harness, folded in here); the streaming block drives each handle's
 foreachBatch writer directly (the way the tests do) and counts the jobs
 one steady-state micro-batch costs — the per-batch fixed-job overhead
 VERDICT r14 item 7 asks to measure.
