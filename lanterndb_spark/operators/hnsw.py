@@ -64,11 +64,16 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lanterndb_spark.operators.ivf import _route_blocks, _route_probes
+
 _M_DEFAULT = 16          # options.h:14-45 m default
 _EFC_DEFAULT = 128       # ef_construction default (options.h)
 _EF_DEFAULT = 64         # ef search default (options.h)
 _CHUNK = 128             # lockstep insert batch (hnswlib-concurrency analogue)
 _MAX_BATCH_QUERIES = 100_000  # driver-list search cap (knn.py contract)
+# batch query payloads up to this size ride the kernel's closure: a Python
+# broadcast costs ~0.1 s per 32-task job (4 vCPUs), more than 1 MB/task
+_CLOSURE_BYTES = 1 << 20
 _UPPER_EXACT = 4096      # upper-level graphs below this size search exactly
 
 # Blob header: 4-byte magic + 16 random bytes stamped at serialization
@@ -1605,16 +1610,23 @@ def _prep_query(index: HnswIndex, query):
     return q.tolist(), 1.0
 
 
-def _probe_shards(index: HnswIndex, q, nprobe: int | None):
-    """Cluster-routed probe list (driver-side argmin over the tiny
-    centroid matrix — IVF's probe selection); None = search every shard
-    (hash routing, or nprobe unset/full)."""
+def _routed_probe(index: HnswIndex, nprobe: int | None) -> bool:
+    """Validate ``nprobe``; True when it prunes shards (cluster routing,
+    nprobe below the shard count), False when every shard runs."""
     if nprobe is not None and nprobe < 1:
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-    if index.centroids is None or nprobe is None or nprobe >= index.num_shards:
+    return (index.centroids is not None and nprobe is not None
+            and nprobe < index.num_shards)
+
+
+def _probe_shards(index: HnswIndex, q, nprobe: int | None):
+    """Cluster-routed probe list of one prepped query (IVF's probe
+    selection, :func:`ivf._route_probes` — the same routing every hnsw
+    search form runs); None = search every shard."""
+    if not _routed_probe(index, nprobe):
         return None
-    d = ((index.centroids - np.asarray(q, dtype=np.float64)[None, :]) ** 2).sum(1)
-    return [int(i) for i in np.argsort(d)[:nprobe]]
+    qarr = np.asarray(q, dtype=np.float64)[None, :]
+    return [int(i) for i in _route_probes(index.centroids, qarr, nprobe)[0]]
 
 
 def hnsw_candidates(
@@ -1852,6 +1864,217 @@ def hnsw_search_filtered(
             probe = min(index.num_shards, probe * 2)
 
 
+def _prep_rows(metric: str, raw: list):
+    """(kept row positions, prepped float64 matrix) of raw query rows,
+    the batch twin of :func:`_prep_query`: hamming expands to 0/1 bits,
+    cos normalizes and DROPS zero-norm rows (undefined angle)."""
+    pos = np.arange(len(raw))
+    if not len(raw):
+        return pos, np.zeros((0, 0))
+    if metric == "hamming":
+        return pos, _bits_rows(raw)
+    Qp = np.asarray(raw, dtype=np.float64)
+    if metric == "cos":
+        return _norm_rows(pos, Qp)
+    return pos, Qp
+
+
+def _beam_rows(blob, Qs: list, kk: int, ef: int, dead, scale: float):
+    """One shard's lockstep beams over the prepped queries ``Qs`` as
+    flat arrays (per-query row counts, ids, dists), each query cut to
+    the global kk — a shard never contributes more to a query's top-kk,
+    and a per-query pd.DataFrame costs ~50 us x nq x shards (200 s of a
+    10k-query 2M smoke once). None when no query found a row."""
+    results = _graph_from_blob_cached(blob).search_many(
+        Qs, kk, ef, skip_ids=dead)
+    ids_l = [ids[:kk] for ids, _ in results]
+    cnts = np.asarray([len(x) for x in ids_l], dtype=np.int64)
+    if not cnts.sum():
+        return None
+    return (cnts, np.concatenate(ids_l),
+            np.concatenate([ds[:kk] for _, ds in results]) * scale)
+
+
+def _partial_topk(qkeys: list, kk: int, replicated: bool):
+    """NARROW per-partition combiner (map-side top-k) over candidate
+    frames keyed by ``qkeys``: a partition holds many shards'
+    candidates, but only kk per query can survive the global cut —
+    shrinking the window shuffle from (shards x nq x kk) rows to
+    (partitions x nq x kk)."""
+    def changed(*cols):
+        return np.logical_or.reduce([c[1:] != c[:-1] for c in cols])
+
+    def partial_topk(batches):
+        chunks = [pdf for pdf in batches if len(pdf)]
+        if not chunks:
+            return
+        allpdf = chunks[0] if len(chunks) == 1 else pd.concat(
+            chunks, ignore_index=True
+        )
+        # key columns, major first (lexsort's primary key is its last)
+        q = [allpdf[c].to_numpy() for c in qkeys]
+        d = allpdf["dist"].to_numpy()
+        gid = allpdf["__gid"].to_numpy()
+        if replicated:
+            # replicas > 1: the same (q, id) can arrive from several
+            # overlapping shards IN THIS PARTITION; merge to min dist
+            # first, or duplicates occupy top-kk slots and push a true
+            # candidate below the cut (the partition supersets would
+            # no longer cover the global top-kk)
+            order = np.lexsort((d, gid, *q[::-1]))
+            q, d, gid = [c[order] for c in q], d[order], gid[order]
+            first = np.r_[True, changed(*q, gid)]
+            q, d, gid = [c[first] for c in q], d[first], gid[first]
+        order = np.lexsort((gid, d, *q[::-1]))
+        q, d, gid = [c[order] for c in q], d[order], gid[order]
+        starts = np.flatnonzero(np.r_[True, changed(*q)])
+        runs = np.diff(np.r_[starts, len(d)])
+        rank = np.arange(len(d)) - np.repeat(starts, runs)
+        keep = rank < kk
+        out = {c: x[keep] for c, x in zip(qkeys, q)}
+        out["__gid"] = gid[keep]
+        out["dist"] = d[keep]
+        yield pd.DataFrame(out)
+
+    return partial_topk
+
+
+def _pq_rerank(
+    index: HnswIndex, top: DataFrame, qdf: DataFrame, base: DataFrame,
+    k: int, key: str, broadcast: bool,
+) -> DataFrame:
+    """Exact re-rank of a pq index's oversampled ADC candidates ``top``
+    (key, <id_col>, dist): each joins its query vector from ``qdf``
+    (key, __qv) and its raw ``base`` row; keep the exact top-k per key.
+    ``broadcast`` (driver-resident queries) broadcasts the candidates
+    onto ``base``, whose scan then never shuffles; otherwise AQE picks
+    the joins. Returns ``top``'s columns with the exact dist."""
+    from pyspark.sql import Window
+
+    from lanterndb_spark.functions.distance import distance as dist_expr
+
+    vecs = base.select(
+        F.col(index.id_col), F.col(index.vec_col).alias("__bv")
+    )
+    cand = top.drop("dist")
+    if broadcast:
+        rescored = vecs.join(
+            F.broadcast(cand.join(F.broadcast(qdf), on=key)), on=index.id_col
+        )
+    else:
+        rescored = cand.join(qdf, on=key).join(vecs, on=index.id_col)
+    rescored = rescored.withColumn(
+        "dist",
+        dist_expr(index.metric, F.col("__bv"), F.col("__qv")).cast("double"),
+    ).filter(F.col("dist").isNotNull())
+    w = Window.partitionBy(key).orderBy(
+        F.col("dist").asc(), F.col(index.id_col).asc()
+    )
+    return (
+        rescored.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .drop("__rn", "__qv", "__bv")
+    )
+
+
+def _search_collected(
+    index: HnswIndex,
+    raw: list,
+    k: int,
+    ef: int,
+    deleted: set | None,
+    nprobe: int | None,
+    base: DataFrame | None,
+    keys: list | None = None,
+) -> DataFrame:
+    """The known-small batch kernel of ``hnsw_search_batch`` and
+    ``hnsw_search_df``'s driver route over driver-resident query
+    vectors ``raw``: prep and route once on the driver, ship the prepped
+    matrix and probe map in the closure (a broadcast above
+    ``_CLOSURE_BYTES``), ONE mapInPandas over the probed graphs running
+    each shard's queries in lockstep, cut to kk per query in the same
+    worker, and one window keyed by row POSITION (duplicate or NULL keys
+    need no check). ``keys`` (long, NULLs allowed) ride beside the
+    position as q_id; else q_id is the position. Returns (q_id,
+    <id_col>, dist)."""
+    from pyspark.sql import Window
+
+    routed = _routed_probe(index, nprobe)
+    rerank = index.quant == "pq" and base is not None
+    kk = k * 8 if rerank else k
+    ef = max(ef, kk)
+    scale = 0.5 if index.metric == "cos" else 1.0
+    dead = frozenset(int(i) for i in deleted) if deleted else None
+    replicated = getattr(index, "replicas", 1) > 1
+    pos, Qp = _prep_rows(index.metric, raw)
+    graphs = index.graphs
+    probe_map = None  # shard -> rows of Qp; None = every shard, every row
+    if routed:
+        probe_map = {}
+        if len(pos):
+            probes = _route_probes(index.centroids, Qp, int(nprobe))
+            order = np.argsort(probes, axis=None, kind="stable")
+            shards, starts = np.unique(probes.flat[order], return_index=True)
+            rows = np.split(order // probes.shape[1], starts[1:])
+            probe_map = dict(zip(shards.tolist(), rows))
+        graphs = graphs.filter(F.col("shard").isin(sorted(probe_map)))
+    spark = graphs.sparkSession
+    qk = None if keys is None else pd.array(keys, dtype="Int64")
+    payload, bc = (pos, Qp, probe_map, qk), None
+    if Qp.nbytes > _CLOSURE_BYTES:
+        payload, bc = None, spark.sparkContext.broadcast(payload)
+    cut = _partial_topk(["__pos"], kk, replicated)
+
+    def search(batches):
+        pos_, Qm, pmap, _ = payload or bc.value
+        every = np.arange(len(pos_))
+        for pdf in batches:
+            for shard, blob in zip(pdf["shard"], pdf["blob"]):
+                rows = every if pmap is None else pmap.get(int(shard), ())
+                hit = len(rows) and _beam_rows(
+                    blob, Qm[rows].tolist(), kk, ef, dead, scale)
+                if hit:
+                    cnts, gid, dist = hit
+                    yield pd.DataFrame({
+                        "__pos": np.repeat(pos_[rows].astype(np.int32), cnts),
+                        "__gid": gid, "dist": dist,
+                    })
+
+    def run(batches):
+        qk_ = (payload or bc.value)[3]
+        for out in cut(search(batches)):
+            if qk_ is not None:
+                out.insert(1, "q_id", qk_.take(out["__pos"].to_numpy()))
+            yield out
+
+    key, ddl = ["__pos"], "__pos int, "
+    if keys is not None:
+        key, ddl = ["__pos", "q_id"], "__pos int, q_id long, "
+    cand = graphs.mapInPandas(run, ddl + "__gid bigint, dist double")
+    if replicated:
+        # cross-partition copies of a (q, id) pair survive the
+        # combiner; one global merge keeps the min-dist copy so the
+        # rank window never double-counts an id
+        cand = cand.groupBy(*key, "__gid").agg(F.min("dist").alias("dist"))
+    w = Window.partitionBy("__pos").orderBy(
+        F.col("dist").asc(), F.col("__gid").asc()
+    )
+    top = (
+        cand.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= kk)
+        .select(*key, F.col("__gid").alias(index.id_col), "dist")
+    )
+    if rerank:
+        # the query vectors come from the collected rows, by position
+        qdf = spark.createDataFrame(pd.DataFrame({
+            "__pos": np.arange(len(raw), dtype=np.int32),
+            "__qv": [[float(x) for x in q] for q in raw],
+        }), "__pos int, __qv array<double>")
+        top = _pq_rerank(index, top, qdf, base, k, "__pos", True)
+    q_out = F.col("__pos").alias("q_id") if keys is None else F.col("q_id")
+    return top.select(q_out, index.id_col, "dist")
+
+
 def hnsw_search_batch(
     index: HnswIndex,
     queries: list,
@@ -1861,126 +2084,19 @@ def hnsw_search_batch(
     nprobe: int | None = None,
     base: DataFrame | None = None,
 ) -> DataFrame:
-    """Batch twin: ONE distributed job answers every query — each shard
-    row runs the beams that probe it against its deserialized graph
-    (amortizing the blob load across the batch), emits per-query locals,
-    and one window takes the global per-query top-k. With cluster
-    routing + ``nprobe``, the graphs scan prunes to the union of probed
-    shards and each shard runs only its own queries' beams. Returns
-    (q_id, id, dist).
-
-    ``quant='pq'`` indexes return ADC (reconstruction) distances; pass
-    ``base`` (the raw table) to RE-RANK an 8x-oversampled candidate set
-    with exact distances — blobs store codes only, so the raw vectors
-    must come from the caller's table."""
-    from pyspark.sql import Window
-
-    if nprobe is not None and nprobe < 1:
-        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-    # the driver-list form ships every query in the task closure — fine
-    # for the documented ≤100k contract, a multi-hundred-MB closure to
-    # every task beyond it. Enforce rather than silently degrade
-    # (knn.py's MAX_BROADCAST_QUERIES contract).
+    """Driver-list front-end of ``hnsw_search_df``'s known-small route
+    (the same kernel, :func:`_search_collected`). Returns (q_id,
+    <id_col>, dist), q_id the list position; cos zero-norm queries are
+    dropped. ``quant='pq'`` returns ADC distances unless ``base`` (the
+    raw table) is given to re-rank an 8x-oversampled candidate set
+    exactly. Capped at 100k queries (knn.py's broadcast contract)."""
     if len(queries) > _MAX_BATCH_QUERIES:
         raise ValueError(
-            f"hnsw_search_batch ships the query list in the task closure; "
-            f"got {len(queries)} > {_MAX_BATCH_QUERIES} queries. Use "
+            f"hnsw_search_batch broadcasts the query list; got "
+            f"{len(queries)} > {_MAX_BATCH_QUERIES} queries. Use "
             f"hnsw_search_df, which shuffles queries as a DataFrame."
         )
-    rerank = index.quant == "pq" and base is not None
-    kk = k * 8 if rerank else k
-    ef = max(ef, kk)
-    prepped = [_prep_query(index, q) for q in queries]
-    Q = [q for q, _ in prepped]
-    scale = prepped[0][1] if prepped else 1.0
-    dead = frozenset(int(i) for i in deleted) if deleted else None
-    probe_map = None  # shard -> [q_id]; None = every shard runs every query
-    graphs = index.graphs
-    if index.centroids is not None and nprobe is not None             and nprobe < index.num_shards:
-        probe_map = {}
-        for qi, q in enumerate(Q):
-            for sh in _probe_shards(index, q, nprobe):
-                probe_map.setdefault(sh, []).append(qi)
-        graphs = graphs.filter(F.col("shard").isin(sorted(probe_map)))
-
-    def run(batches):
-        for pdf in batches:
-            for shard, blob in zip(pdf["shard"], pdf["blob"]):
-                qids = list(
-                    range(len(Q)) if probe_map is None
-                    else probe_map.get(int(shard), ())
-                )
-                if not qids:
-                    continue
-                g = _graph_from_blob_cached(blob)
-                # all of this shard's queries advance in LOCKSTEP — one
-                # einsum per wave scores every query's frontier, so the
-                # blob amortizes AND the beam overhead amortizes
-                results = g.search_many(
-                    [Q[qi] for qi in qids], kk, ef, skip_ids=dead
-                )
-                # vectorized assembly, truncated to the global cut kk
-                # (a shard contributes at most kk rows per query)
-                ids_l = [ids[:kk] for ids, _ in results]
-                cnts = np.asarray([len(x) for x in ids_l], dtype=np.int64)
-                if cnts.sum():
-                    yield pd.DataFrame({
-                        "q_id": np.repeat(
-                            np.asarray(qids, dtype=np.int64), cnts
-                        ),
-                        "__gid": np.concatenate(ids_l),
-                        "dist": np.concatenate(
-                            [ds[:kk] for _, ds in results]
-                        ) * scale,
-                    })
-
-    cand = graphs.mapInPandas(run, "q_id int, __gid bigint, dist double")
-    if getattr(index, "replicas", 1) > 1:
-        # overlapping shards return replicated (q, id) rows: merge to
-        # min dist BEFORE the rank window so duplicates can't occupy
-        # top-k slots (per-shard pq codebooks may disagree slightly)
-        cand = cand.groupBy("q_id", "__gid").agg(F.min("dist").alias("dist"))
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("__gid").asc())
-    top = (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= kk)
-        .select("q_id", F.col("__gid").alias(index.id_col), "dist")
-    )
-    if not rerank:
-        return top
-    # exact re-rank of the oversampled ADC candidates against the raw
-    # vectors (broadcast of nq tiny query literals; candidate set is
-    # nq·8k rows)
-    from lanterndb_spark.functions.distance import distance as dist_expr
-
-    spark = base.sparkSession
-    qdf = spark.createDataFrame(
-        [(i, [float(x) for x in q]) for i, q in enumerate(queries)],
-        "q_id int, __qv array<double>",
-    )
-    vecs = base.select(
-        F.col(index.id_col), F.col(index.vec_col).alias("__bv")
-    )
-    # candidates (nq·8k rows) BROADCAST onto the raw table — the base
-    # scan prunes through the hash join and never shuffles, the same
-    # economics as hnsw_search's isin pushback
-    cand_q = top.drop("dist").join(F.broadcast(qdf), on="q_id")
-    rescored = (
-        vecs.join(F.broadcast(cand_q), on=index.id_col)
-        .withColumn(
-            "dist",
-            dist_expr(index.metric, F.col("__bv"), F.col("__qv")).cast("double"),
-        )
-        .filter(F.col("dist").isNotNull())
-    )
-    w2 = Window.partitionBy("q_id").orderBy(
-        F.col("dist").asc(), F.col(index.id_col).asc()
-    )
-    return (
-        rescored.withColumn("__rn", F.row_number().over(w2))
-        .filter(F.col("__rn") <= k)
-        .select("q_id", index.id_col, "dist")
-    )
+    return _search_collected(index, queries, k, ef, deleted, nprobe, base)
 
 
 _INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
@@ -2013,29 +2129,22 @@ def _has_duplicate_qids(queries: DataFrame, q_id_col: str) -> bool:
     must take the per-row surrogate wrap. A standalone action, so the
     batch ANN searches avoid it where a pass they run anyway can answer
     (collected keys: :func:`_collected_qids_need_wrap`; ivf's prune
-    rollup; hnsw's inline occurrence key). Callers: ``ivf_search_df``
-    and the ivfsq/ivfpq composites only with no such pass
-    (``prune=False`` or nprobe ≥ nlist), ``hnsw_search_df`` on its pq
-    re-rank path, ``hnsw_search_df_filtered``, hybrid's batch,
-    ``LanternTable.knn_batch``, and the unhashable-key fallback of
-    :func:`_collected_qids_need_wrap`. Callers that mint their own ids
-    skip it via unique_q_ids.
-    NULL keys count too: count/count_distinct both skip NULLs, so
-    NULL-keyed rows would otherwise slip past detection — and ANY
-    NULL key (even a single one) must take the surrogate wrap, because
-    the downstream equi-joins (ivfsq/ivfpq re-rank on q_id, hybrid's
-    scoring join) silently drop NULL keys, returning zero rows for
-    that query with no error (r12 review + r13 advice). The wrap gives
-    each row a non-NULL surrogate and restores NULL labels per row.
+    rollup; hnsw's position keys and inline occurrence key). Callers:
+    ``ivf_search_df`` and the ivfsq/ivfpq composites only with no such
+    pass (``prune=False`` or nprobe ≥ nlist), ``hnsw_search_df``'s
+    executor-route pq re-rank, ``hnsw_search_df_filtered``, hybrid's
+    batch, ``LanternTable.knn_batch``, and the unhashable-key fallback
+    of :func:`_collected_qids_need_wrap`. Callers that mint their own
+    ids skip it via unique_q_ids. ANY NULL key counts (count and
+    count_distinct both skip NULLs, and the downstream equi-joins drop
+    NULL keys, returning zero rows for that query with no error); the
+    wrap gives each row a non-NULL surrogate and restores NULL labels.
 
-    A KNOWN-small frame (Catalyst rowCount — exact for a materialized
-    cache) aggregates its pruned key column in ONE task instead of a
-    partial+final pass over every input partition: at a few hundred
-    queries the check is pure fixed task-scheduling overhead (measured
-    0.26 s -> 0.14 s interleaved on a 256-row cached frame). coalesce
-    is narrow, so semantics are bit-identical; unknown or large row
-    counts keep the parallel shape — coalesce(1) would serialize
-    evaluation of a big or expensive queries lineage."""
+    A KNOWN-small frame aggregates its pruned key column in ONE task
+    instead of a partial+final pass over every input partition (0.26 s
+    -> 0.14 s on a 256-row cached frame); coalesce is narrow, so the
+    result is identical, and unknown or large row counts keep the
+    parallel shape."""
     from lanterndb_spark.plans.shape import known_small
 
     keys = queries.select(q_id_col)
@@ -2108,66 +2217,53 @@ def hnsw_search_df(
     unique_q_ids: bool = False,
     broadcast_queries: bool | None = None,
 ) -> DataFrame:
-    """DataFrame-native batch ANN: queries arrive as a DataFrame and
-    are SHUFFLED to their probed shards instead of shipped in a task
-    closure, so the query volume is unbounded — the 100 TB eval /
-    hard-negative-mining shape (10^5-10^6 queries) that the driver-list
-    ``hnsw_search_batch`` guards against at 100k.
+    """DataFrame-native batch ANN: the query volume is unbounded (the
+    10^5-10^6-query eval / hard-negative-mining shape that the
+    driver-list ``hnsw_search_batch`` caps at 100k). Two routes share
+    the lockstep ``search_many`` core and the routing
+    (``ivf._route_blocks``), so their rows are identical:
 
-    Plan: one ``mapInPandas`` preps + routes each query (cos normalize /
-    hamming bit-expand; cluster routing picks its nprobe nearest
-    centroids, hash routing fans out to every shard), one cogroup by
-    shard runs each shard's routed queries through the SAME lockstep
-    ``search_many`` core as the driver-list form (so results are
-    identical by construction, and per-task memory is bounded at
-    ``_CHUNK`` queries per wave-set regardless of batch size), and one
-    window takes the per-query global top-k. ``quant='pq'`` + ``base``
-    re-ranks an 8x-oversampled ADC candidate set exactly, like
-    ``hnsw_search_batch``.
+    - known-small (driver) route: the queries collect once and run the
+      driver-list kernel (:func:`_search_collected`), rows keyed by
+      position with the caller's key riding beside it;
+    - executor route: one mapInPandas preps + routes each query (cluster
+      routing picks its nprobe nearest centroids, hash routing fans out
+      to every shard), one cogroup by shard runs each shard's queries
+      (``_CHUNK`` queries per wave-set bound the task memory), a
+      map-side top-k, and one window; rows key on (q_id, an inline
+      occurrence number — the ``search_bm25_df`` pattern).
 
-    Returns (q_id, <id_col>, dist) — ``q_id`` keeps the caller's column
-    TYPE: integral q_ids ride the graph kernels' int64 keys directly;
-    any other type (string eval ids, decimals, …) is zipped to a long
-    surrogate, searched, and restored after the merge at the cost of
-    one extra equi-join (the scan contract is label-agnostic — TIDs,
-    scan.c:302-308 — so the batch form is too). Duplicate q_id VALUES
-    are PER-ROW on every path (each input row keeps its own top-k,
-    the lateral-join semantics a SQL batch would have), and no path
-    pays a standalone detection job for it: the driver route checks
-    the keys it collects and takes the surrogate wrap on a duplicate
-    or NULL key; the executor route keys each row by an inline
-    occurrence number (one window in the query-side stage, the
-    ``search_bm25_df`` pattern), so duplicate and NULL q_ids answer
-    per row and NULLs come back NULL. Only the pq re-rank
-    (``quant='pq'`` with ``base``), which re-reads ``queries`` joined
-    by q_id, keeps one column-pruned detection aggregate before the
-    wrap. The result does not depend on the key dtype. Callers that
-    mint their own unique ids pass ``unique_q_ids=True`` to skip the
-    per-row keying (asserting uniqueness — with duplicates present it
-    silently merges their candidate sets). cos queries with zero norm are DROPPED (undefined
-    angle, distance.py's NULL convention). Reference parity:
-    scan.c:167-238 is per-query; this is the batch recast that scales
-    it.
+    Returns (q_id, <id_col>, dist); q_id keeps the caller's TYPE:
+    non-integral keys are zipped to a long surrogate and restored by one
+    equi-join (the scan contract is label-agnostic, scan.c:302-308).
+    Duplicate and NULL q_ids answer PER ROW on both routes with no
+    detection job, NULLs coming back NULL; only the executor route's pq
+    re-rank, which re-reads ``queries`` by q_id, runs one detection
+    aggregate first. ``unique_q_ids=True`` skips the executor route's
+    per-row keying (duplicates then merge). cos zero-norm queries are
+    DROPPED. ``quant='pq'`` + ``base`` re-ranks an 8x-oversampled ADC
+    candidate set exactly. Reference parity: scan.c:167-238 is
+    per-query; this is the batch recast that scales it.
 
-    ``broadcast_queries``: None (default) takes a DRIVER-side prep +
-    route when Catalyst knows the frame's exact row count is small
-    (``shape.known_small``; r15, the ivf_search_df driver-route twin): the queries collect
-    once, prep/route through the SAME numpy code the executor pass
-    runs (bit-identical), the routed relation shrinks to narrow
-    (position, shard) pairs, and the shard kernel reads the query
-    matrix from a broadcast — the prep mapInPandas pass disappears.
-    Streaming handles whose micro-batch contract guarantees smallness
-    pass True (their foreachBatch frames carry no stats); False forces
-    the executor pass. Unknown stats without the hint keep the
-    executor pass — queries never touch the driver at scale."""
+    ``broadcast_queries``: None (default) takes the driver route when
+    Catalyst knows the frame's exact row count is small
+    (``shape.known_small``: pandas- or Arrow-built frames, materialized
+    caches — NOT a Python-list-built frame, which plans as a LogicalRDD
+    with unknown stats). True asserts smallness (streaming handles,
+    whose foreachBatch frames carry no stats); False forces the
+    executor route. Unknown stats keep the executor route — queries
+    never touch the driver at scale."""
     from pyspark.sql import Window
 
-    if nprobe is not None and nprobe < 1:
-        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
+    from lanterndb_spark.plans.shape import coalesce_known_small, known_small
+
+    routed_probe = _routed_probe(index, nprobe)
     integral = (
         queries.schema[q_id_col].dataType.simpleString() in _INTEGRAL_TYPES
     )
     rerank = index.quant == "pq" and base is not None
+    if broadcast_queries is None:
+        broadcast_queries = known_small(queries)
 
     def _wrap():
         keyed = _surrogate_key_queries(queries, q_id_col, q_vec_col)
@@ -2179,12 +2275,19 @@ def hnsw_search_df(
         )
         return _restore_surrogate(inner, keyed, q_id_col, [index.id_col, "dist"])
 
+    if not integral:
+        return _wrap()
+    if broadcast_queries:
+        qrows = queries.select(
+            F.col(q_id_col).cast("long"), F.col(q_vec_col)
+        ).collect()
+        return _search_collected(
+            index, [r[1] for r in qrows], k, ef, deleted, nprobe, base,
+            keys=[r[0] for r in qrows],
+        )
     # the pq re-rank re-reads ``queries`` joined by q_id, where duplicate
     # keys would fan out: that path keeps the standalone check
-    if not integral or (
-        rerank and not unique_q_ids
-        and _has_duplicate_qids(queries, q_id_col)
-    ):
+    if rerank and not unique_q_ids and _has_duplicate_qids(queries, q_id_col):
         return _wrap()
     per_row = not unique_q_ids and not rerank
     kk = k * 8 if rerank else k
@@ -2194,262 +2297,82 @@ def hnsw_search_df(
     metric = index.metric
     scale = 0.5 if metric == "cos" else 1.0
     cents = index.centroids
-    num_shards = index.num_shards
-    routed_probe = (
-        cents is not None and nprobe is not None and nprobe < num_shards
-    )
     np_eff = int(nprobe) if routed_probe else 0
 
-    if broadcast_queries is None:
-        from lanterndb_spark.plans.shape import known_small
-
-        broadcast_queries = known_small(queries)
-    qbc = None
-    routed = None
-    if broadcast_queries:
-        # driver-side prep + route (see docstring): the SAME _bits_rows
-        # / _norm_rows / centroid-scoring numpy the executor pass runs,
-        # so the prepped vectors and the probed-shard SETS are
-        # bit-identical; the kernel reads the query matrix from the
-        # broadcast and the routed relation is narrow (position, shard)
-        qrows = queries.select(
-            F.col(q_id_col).cast("long"), F.col(q_vec_col)
-        ).collect()
-        if per_row:
-            if _collected_qids_need_wrap(
-                [r[0] for r in qrows], queries, q_id_col
-            ):
-                # broadcast_queries is True by now: the keyed frame is
-                # as small as this one, so the wrapped call stays on the
-                # driver route too
-                return _wrap()
-            per_row = False
-        if qrows:
-            raw = [list(r[1]) for r in qrows]
-            qids0 = np.empty(len(qrows), dtype=object)
-            qids0[:] = [r[0] for r in qrows]
-            if metric == "hamming":
-                qk, Qp = qids0, _bits_rows(raw)
-            else:
-                Qp = np.asarray(raw, dtype=np.float64)
-                if metric == "cos":
-                    qk, Qp = _norm_rows(qids0, Qp)
-                else:
-                    qk = qids0
-            nq = len(qk)
-            if nq:
-                if routed_probe:
-                    cn = np.einsum("sd,sd->s", cents, cents)
-                    blk = max(1, (1 << 25) // max(len(cents), 1))
-                    probes_l = []
-                    for s in range(0, nq, blk):
-                        Qb = Qp[s:s + blk]
-                        d = cn[None, :] - 2.0 * (Qb @ cents.T)
-                        probes_l.append(
-                            np.argpartition(d, np_eff - 1, axis=1)[:, :np_eff]
-                        )
-                    pos = np.repeat(np.arange(nq, dtype=np.int32), np_eff)
-                    shards = np.concatenate(probes_l).reshape(-1).astype(
-                        np.int32)
-                else:
-                    # full probe: every query visits every existing
-                    # shard; the shard-key set comes from the stamp a
-                    # chained insert left on the graphs frame, or one
-                    # column-pruned collect (stamped here so later
-                    # searches AND inserts reuse it)
-                    shard_ids = index.graphs.__dict__.get(
-                        "_lantern_shard_keys")
-                    if shard_ids is None:
-                        shard_ids = {
-                            int(r["shard"])
-                            for r in index.graphs.select("shard").collect()
-                        }
-                        index.graphs.__dict__["_lantern_shard_keys"] = (
-                            set(shard_ids))
-                    sh = np.asarray(sorted(shard_ids), dtype=np.int32)
-                    pos = np.repeat(
-                        np.arange(nq, dtype=np.int32), len(sh))
-                    shards = np.tile(sh, nq)
-                qbc = queries.sparkSession.sparkContext.broadcast((qk, Qp))
-                routed = queries.sparkSession.createDataFrame(pd.DataFrame({
-                    "__pos": pos, "__shard": shards}))
-        # zero collected/prepped queries: fall through to the executor
-        # shape, which evaluates the (empty) lineage into the same
-        # empty result frame
-
-    # per-row keys on the executor route (the search_bm25_df pattern,
-    # no detection job): rows key on (coalesce(q_id, 0), __occ), where
-    # __occ numbers each row among equal q_id values (NULLs form one
-    # window group) and is negated for NULL q_ids, so both parts are
-    # non-NULL int64/int32 the kernels can carry. Ordering by the vector
-    # keeps the numbering retry-stable: rows with equal (q_id, vector)
-    # have equal answers. The final window keys on the pair and the
-    # JVM restores the NULL q_ids.
+    # per-row keys: (coalesce(q_id, 0), __occ), __occ numbering each
+    # row among equal q_ids (negated for NULL q_ids), so both parts are
+    # non-NULL ints the kernels carry. Ordering by the vector keeps the
+    # numbering retry-stable; the final select restores NULL q_ids.
     occ = ["__occ"] if per_row else []
     occ_ddl = "".join(f"{c} int, " for c in occ)
     qkeys = ["q_id", *occ]
-    if routed is None:
-        qid = F.col(q_id_col).cast("long")
-        if per_row:
-            n = F.row_number().over(
-                Window.partitionBy(q_id_col).orderBy(q_vec_col)
-            )
-            kcols = [
-                F.coalesce(qid, F.lit(0)).alias("__qid"),
-                F.when(qid.isNull(), -n).otherwise(n).alias("__occ"),
-            ]
-        else:
-            kcols = [qid.alias("__qid")]
-        qsel = queries.select(*kcols, F.col(q_vec_col).alias("__q"))
-        # known-small query batches prep/route in a few big Python
-        # tasks instead of one near-empty task per input partition
-        # (stats-driven, no job; large/unknown inputs keep their
-        # parallelism)
-        from lanterndb_spark.plans.shape import coalesce_known_small
+    qid = F.col(q_id_col).cast("long")
+    if per_row:
+        n = F.row_number().over(
+            Window.partitionBy(q_id_col).orderBy(q_vec_col)
+        )
+        kcols = [
+            F.coalesce(qid, F.lit(0)).alias("__qid"),
+            F.when(qid.isNull(), -n).otherwise(n).alias("__occ"),
+        ]
+    else:
+        kcols = [qid.alias("__qid")]
+    # known-small query batches prep/route in a few big Python tasks
+    # instead of one near-empty task per input partition (stats-driven,
+    # no job; large/unknown inputs keep their parallelism)
+    qsel = coalesce_known_small(
+        queries.select(*kcols, F.col(q_vec_col).alias("__q")), queries
+    )
+    kdf_cols = ["__qid", *occ]
 
-        qsel = coalesce_known_small(qsel, queries)
+    def route(batches):
+        """Prepped rows per arrow batch: np_eff copies of each row with
+        its probed shard under cluster routing, one copy otherwise."""
+        for pdf in batches:
+            live, Qp = _prep_rows(metric, pdf["__q"].tolist())
+            keys = pdf[kdf_cols].iloc[live]
+            blocks = (_route_blocks(cents, Qp, np_eff) if routed_probe
+                      else [(0, None)] if len(Qp) else [])
+            for s, sh in blocks:
+                B = len(Qp) if sh is None else len(sh)
+                rows = np.repeat(np.arange(s, s + B), max(np_eff, 1))
+                out = {c: keys[c].to_numpy()[rows] for c in kdf_cols}
+                out["__q"] = [Qp[i].tolist() for i in rows]
+                if sh is not None:
+                    out["__shard"] = sh.reshape(-1).astype(np.int32)
+                yield pd.DataFrame(out)
 
-        kdf_cols = ["__qid", *occ]
-
-        def prep_block(pdf: pd.DataFrame):
-            """(key columns, prepped float64 matrix) per arrow batch."""
-            keys = pdf[kdf_cols]
-            raw = pdf["__q"].tolist()
-            if metric == "hamming":
-                return keys, _bits_rows(raw)
-            Qp = np.asarray(raw, dtype=np.float64)
-            if metric == "cos":
-                live, Qp = _norm_rows(np.arange(len(keys)), Qp)
-                return keys.iloc[live], Qp
-            return keys, Qp
-
-        if routed_probe:
-            def route(batches):
-                for pdf in batches:
-                    keys, Qp = prep_block(pdf)
-                    if not len(keys):
-                        continue
-                    # block the centroid scoring so the (B, S) distance
-                    # matrix stays <=~256 MB even at millions of shards
-                    blk = max(1, (1 << 25) // max(len(cents), 1))
-                    cn = np.einsum("sd,sd->s", cents, cents)
-                    for s in range(0, len(keys), blk):
-                        Qb = Qp[s:s + blk]
-                        d = cn[None, :] - 2.0 * (Qb @ cents.T)
-                        sh = np.argpartition(
-                            d, np_eff - 1, axis=1)[:, :np_eff]
-                        B = len(Qb)
-                        rows = np.repeat(np.arange(s, s + B), np_eff)
-                        out = {c: keys[c].to_numpy()[rows] for c in kdf_cols}
-                        out["__q"] = [Qb[i].tolist() for i in range(B)
-                                      for _ in range(np_eff)]
-                        out["__shard"] = sh.reshape(-1).astype(np.int32)
-                        yield pd.DataFrame(out)
-
-            routed = qsel.mapInPandas(
-                route, f"__qid long, {occ_ddl}__q array<double>, __shard int"
-            )
-        else:
-            def prep(batches):
-                for pdf in batches:
-                    keys, Qp = prep_block(pdf)
-                    if len(keys):
-                        out = {c: keys[c].to_numpy() for c in kdf_cols}
-                        out["__q"] = [r.tolist() for r in Qp]
-                        yield pd.DataFrame(out)
-
-            prepped = qsel.mapInPandas(
-                prep, f"__qid long, {occ_ddl}__q array<double>"
-            )
-            # hash routing / full probe: every query visits every
-            # existing shard — the fan-out is declarative (broadcast of
-            # the tiny shard-id list), never a driver collect
-            routed = prepped.crossJoin(
-                F.broadcast(
-                    index.graphs.select(F.col("shard").alias("__shard")))
-            )
-
+    routed = qsel.mapInPandas(
+        route, f"__qid long, {occ_ddl}__q array<double>"
+        + (", __shard int" if routed_probe else ""),
+    )
+    if not routed_probe:
+        # hash routing / full probe: every query visits every existing
+        # shard — the fan-out is declarative (broadcast of the tiny
+        # shard-id list), never a driver collect
+        routed = routed.crossJoin(
+            F.broadcast(index.graphs.select(F.col("shard").alias("__shard")))
+        )
     cand_ddl = f"q_id long, {occ_ddl}__gid bigint, dist double"
-    empty_cand = {"q_id": "int64", **dict.fromkeys(occ, "int32"),
-                  "__gid": "int64", "dist": "float64"}
 
     def run_shard(key, gpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(gpdf) or not len(qpdf):
-            return pd.DataFrame(
-                {c: pd.Series(dtype=t) for c, t in empty_cand.items()})
-        g = _graph_from_blob_cached(gpdf["blob"].iloc[0])
-        if qbc is not None:
-            qk_, qm_ = qbc.value
-            pos = qpdf["__pos"].to_numpy()
-            qids = qk_[pos]
-            results = g.search_many(qm_[pos].tolist(), kk, ef, skip_ids=dead)
-        else:
-            qids = qpdf["__qid"].to_numpy()
-            results = g.search_many(
-                qpdf["__q"].tolist(), kk, ef, skip_ids=dead)
-        # vectorized assembly, truncated to the global cut kk: a shard
-        # can never contribute more than kk rows to a query's top-kk,
-        # and a per-query pd.DataFrame here costs ~50 us x nq x shards
-        # (measured 200 s of the 10k-query 2M smoke before this form)
-        ids_l = [ids[:kk] for ids, _ in results]
-        cnts = np.asarray([len(x) for x in ids_l], dtype=np.int64)
-        if not cnts.sum():
-            return pd.DataFrame(
-                {c: pd.Series(dtype=t) for c, t in empty_cand.items()})
-        out = {"q_id": np.repeat(qids, cnts)}
-        for c in occ:
-            out[c] = np.repeat(qpdf[c].to_numpy(), cnts)
-        out["__gid"] = np.concatenate(ids_l)
-        out["dist"] = np.concatenate([ds[:kk] for _, ds in results]) * scale
+        hit = len(gpdf) and len(qpdf) and _beam_rows(
+            gpdf["blob"].iloc[0], qpdf["__q"].tolist(), kk, ef, dead, scale)
+        if not hit:
+            return pd.DataFrame()
+        cnts, gid, dist = hit
+        out = {c: np.repeat(qpdf[s].to_numpy(), cnts)
+               for c, s in zip(qkeys, kdf_cols)}
+        out["__gid"] = gid
+        out["dist"] = dist
         return pd.DataFrame(out)
 
     cand = (
         index.graphs.groupBy("shard")
         .cogroup(routed.groupBy("__shard"))
         .applyInPandas(run_shard, cand_ddl)
+        .mapInPandas(_partial_topk(qkeys, kk, replicated), cand_ddl)
     )
-
-    def partial_topk(batches):
-        """NARROW per-partition combiner (map-side top-k): a cogroup
-        output partition holds many shards' candidates, but only kk per
-        query can survive the global cut — shrinking the window shuffle
-        from (shards x nq x kk) rows to (partitions x nq x kk)."""
-        chunks = [pdf for pdf in batches if len(pdf)]
-        if not chunks:
-            return
-        allpdf = chunks[0] if len(chunks) == 1 else pd.concat(
-            chunks, ignore_index=True
-        )
-        # key columns, major first (lexsort's primary key is its last)
-        q = [allpdf[c].to_numpy() for c in qkeys]
-        d = allpdf["dist"].to_numpy()
-        gid = allpdf["__gid"].to_numpy()
-
-        def changed(*cols):
-            return np.logical_or.reduce([c[1:] != c[:-1] for c in cols])
-
-        if replicated:
-            # replicas > 1: the same (q, id) can arrive from several
-            # overlapping shards IN THIS PARTITION; merge to min dist
-            # first, or duplicates occupy top-kk slots and push a true
-            # candidate below the cut (the partition supersets would
-            # no longer cover the global top-kk)
-            order = np.lexsort((d, gid, *q[::-1]))
-            q, d, gid = [c[order] for c in q], d[order], gid[order]
-            first = np.r_[True, changed(*q, gid)]
-            q, d, gid = [c[first] for c in q], d[first], gid[first]
-        order = np.lexsort((gid, d, *q[::-1]))
-        q, d, gid = [c[order] for c in q], d[order], gid[order]
-        starts = np.flatnonzero(np.r_[True, changed(*q)])
-        runs = np.diff(np.r_[starts, len(d)])
-        rank = np.arange(len(d)) - np.repeat(starts, runs)
-        keep = rank < kk
-        out = {c: x[keep] for c, x in zip(qkeys, q)}
-        out["__gid"] = gid[keep]
-        out["dist"] = d[keep]
-        yield pd.DataFrame(out)
-
-    cand = cand.mapInPandas(partial_topk, cand_ddl)
     if replicated:
         # cross-partition copies of a (q, id) pair survive the
         # combiner; one global merge keeps the min-dist copy so the
@@ -2468,36 +2391,12 @@ def hnsw_search_df(
     )
     if not rerank:
         return top
-    # exact re-rank: candidates join their ORIGINAL query vector (by
-    # q_id) and the raw base row (by id); both joins are plain equi-joins
-    # AQE can broadcast when small — no driver-side query list anywhere
-    from lanterndb_spark.functions.distance import distance as dist_expr
-
     qdf = queries.select(
         F.col(q_id_col).cast("long").alias("q_id"),
         F.col(q_vec_col).cast("array<double>").alias("__qv"),
     )
-    vecs = base.select(
-        F.col(index.id_col), F.col(index.vec_col).alias("__bv")
-    )
-    rescored = (
-        top.drop("dist")
-        .join(qdf, on="q_id")
-        .join(vecs, on=index.id_col)
-        .withColumn(
-            "dist",
-            dist_expr(metric, F.col("__bv"), F.col("__qv")).cast("double"),
-        )
-        .filter(F.col("dist").isNotNull())
-    )
-    w2 = Window.partitionBy("q_id").orderBy(
-        F.col("dist").asc(), F.col(index.id_col).asc()
-    )
-    return (
-        rescored.withColumn("__rn", F.row_number().over(w2))
-        .filter(F.col("__rn") <= k)
-        .select("q_id", index.id_col, "dist")
-    )
+    return _pq_rerank(index, top, qdf, base, k, "q_id", False).select(
+        "q_id", index.id_col, "dist")
 
 
 def hnsw_search_df_filtered(

@@ -338,6 +338,9 @@ def _partial_topk(k: int, id_col: str):
 
 # element cap of one (B, nlist, dim) routing block: <=~256 MB of f64
 _ROUTE_BLOCK_ELEMS = 1 << 25
+# element cap of one (queries, rows) scoring block: <=~128 MB of f64.
+# The kernels read it from their closure, so it is fixed at plan time.
+_SCORE_BLOCK_ELEMS = 1 << 24
 
 
 def _route_blocks(cents: np.ndarray, qarr: np.ndarray, np_eff: int):
@@ -348,7 +351,10 @@ def _route_blocks(cents: np.ndarray, qarr: np.ndarray, np_eff: int):
     centroid distances (a matmul expansion can order such ties
     differently). Blocked so the (B, nlist, dim) difference tensor stays
     within ``_ROUTE_BLOCK_ELEMS``; each query's row is computed alone, so
-    the block size never changes a probe."""
+    the block size never changes a probe. The one routing of the ivf
+    family AND of cluster-routed hnsw (shards are its cells): every
+    hnsw search form, single-query to executor route, probes through
+    it."""
     dim = cents.shape[1] if cents.ndim == 2 else 1
     blk = max(1, _ROUTE_BLOCK_ELEMS // max(len(cents) * dim, 1))
     for s in range(0, len(qarr), blk):
@@ -836,6 +842,8 @@ def _ivf_search_df(
                 "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_eff - 1)))
             )
 
+        block_elems = _SCORE_BLOCK_ELEMS
+
         def score(key, bpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
             # QUERY-MAJOR kernel (r11): the distance matrix is (queries,
             # rows) so the per-query top-kk cut is ONE contiguous
@@ -882,7 +890,7 @@ def _ivf_search_df(
             out_q, out_i, out_d = [], [], []
             # block queries so the (blk, nb) distance matrix stays
             # <=~128 MB however many queries probe this cluster
-            blk = max(1, (1 << 24) // max(len(X), 1))
+            blk = max(1, block_elems // max(len(X), 1))
             nb = len(X)
             # one C-contiguous transpose per key: dgemm reads it across
             # every block without re-packing
@@ -1410,39 +1418,47 @@ def ivf_search_batch(
             + ["q_id int", "dist double"]
         )
 
+        block_elems = _SCORE_BLOCK_ELEMS
+
         def topk_block(batches):
-            qm, allow = bc.value
-            qn = np.sqrt((qm**2).sum(1)) if metric == "cos" else None
+            qm_all, allow_all = bc.value
             for pdf in batches:
                 if not len(pdf):
                     continue
                 x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-                eligible = allow[pdf["cluster_id"].to_numpy()]  # (n, nq)
-                if metric == "cos":
-                    # zero-norm rows/queries have undefined angle — mask
-                    # them out of eligibility (distance.py's NULL-dist
-                    # convention: they never place in the top-k)
-                    denom = np.sqrt((x**2).sum(1))[:, None] * qn[None, :]
-                    safe = denom > 0.0
-                    d = np.where(
-                        safe, 1.0 - (x @ qm.T) / np.where(safe, denom, 1.0), np.inf
-                    )
-                    eligible = eligible & safe
-                else:
-                    d = (x**2).sum(1)[:, None] - 2.0 * x @ qm.T + (qm**2).sum(1)[None, :]
+                xn = (x**2).sum(1)
+                cl = pdf["cluster_id"].to_numpy()
                 take_idx, take_q, take_d = [], [], []
-                for j in range(qm.shape[0]):
-                    rows_j = np.flatnonzero(eligible[:, j])
-                    if not len(rows_j):
-                        continue
-                    dj = d[rows_j, j]
-                    if k < len(dj):
-                        thresh = np.partition(dj, k - 1)[k - 1]
-                        keep = dj <= thresh
-                        rows_j, dj = rows_j[keep], dj[keep]
-                    take_idx.append(rows_j)
-                    take_q.append(np.full(len(rows_j), j))
-                    take_d.append(dj)
+                # block the queries so the (rows, blk) distance matrix
+                # stays <=~128 MB however many queries the batch holds
+                blk = max(1, block_elems // len(x))
+                for s in range(0, nq, blk):
+                    qm = qm_all[s : s + blk]
+                    eligible = allow_all[cl, s : s + blk]  # (n, blk)
+                    if metric == "cos":
+                        # zero-norm rows/queries have undefined angle —
+                        # mask them out of eligibility (distance.py's
+                        # NULL-dist convention: never in the top-k)
+                        denom = np.sqrt(xn)[:, None] * np.sqrt((qm**2).sum(1))[None, :]
+                        safe = denom > 0.0
+                        d = np.where(
+                            safe, 1.0 - (x @ qm.T) / np.where(safe, denom, 1.0), np.inf
+                        )
+                        eligible = eligible & safe
+                    else:
+                        d = xn[:, None] - 2.0 * x @ qm.T + (qm**2).sum(1)[None, :]
+                    for j in range(qm.shape[0]):
+                        rows_j = np.flatnonzero(eligible[:, j])
+                        if not len(rows_j):
+                            continue
+                        dj = d[rows_j, j]
+                        if k < len(dj):
+                            thresh = np.partition(dj, k - 1)[k - 1]
+                            keep = dj <= thresh
+                            rows_j, dj = rows_j[keep], dj[keep]
+                        take_idx.append(rows_j)
+                        take_q.append(np.full(len(rows_j), s + j))
+                        take_d.append(dj)
                 if not take_idx:
                     continue
                 rows = np.concatenate(take_idx)

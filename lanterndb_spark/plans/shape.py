@@ -129,12 +129,16 @@ def estimated_rows(df: DataFrame) -> float | None:
     analyzed BEFORE ``cache()``/materialization would otherwise report
     the stale pre-cache stats (no rowCount) forever.
 
-    A ``LocalRelation`` root (ad-hoc ``createDataFrame`` batches — e.g.
-    a driver-built query frame feeding the batch search forms) carries
-    no ``rowCount`` in its Statistics, but its row count is exact and
-    driver-resident by definition; read it from the node directly. The
-    optimizer folds Project/Filter chains over local data into a new
-    LocalRelation, so the count is post-pruning exact.
+    A ``LocalRelation`` root carries no ``rowCount`` in its
+    Statistics, but its row count is exact and driver-resident by
+    definition; read it from the node directly. The optimizer folds
+    Project/Filter chains over local data into a new LocalRelation, so
+    the count is post-pruning exact. Which ad-hoc frames are
+    LocalRelations depends on how they were built: a pandas- or
+    Arrow-built ``createDataFrame`` (and SQL ``VALUES``) is one, but
+    ``createDataFrame(list_of_tuples, ddl)`` parallelizes to a
+    ``LogicalRDD`` and reads as unknown (None) — a query frame built
+    that way misses every known-small route.
 
     ``Project`` roots are walked through (r15): the size-only stats
     visitor drops ``rowCount`` at every unary node, so a projection of
@@ -167,7 +171,11 @@ KNOWN_SMALL_ROWS = 65_536
 def known_small(df: DataFrame) -> bool:
     """True when :func:`estimated_rows` knows ``df``'s row count and it
     is at most :data:`KNOWN_SMALL_ROWS` — driver-side, no job. Unknown
-    stats answer False (the scale-conservative default)."""
+    stats answer False (the scale-conservative default): a frame built
+    with ``createDataFrame(list_of_tuples, ddl)`` is a LogicalRDD and
+    answers False however few rows it holds; build small query frames
+    from pandas or Arrow (LocalRelations) to take the known-small
+    routes."""
     est = estimated_rows(df)
     return est is not None and est <= KNOWN_SMALL_ROWS
 

@@ -741,46 +741,70 @@ def _pairs_by_q(rows):
     return {q: sorted(v) for q, v in out.items()}
 
 
-def test_search_df_equals_batch(index, emb, spark):
-    """hnsw_search_df (queries as a DataFrame, shuffled to shards) must
-    return exactly what the driver-list hnsw_search_batch returns — same
-    lockstep core, same tie-breaks."""
+def _list_and_pandas(spark, rows):
+    """The same (q_id, query) rows as a Python-list-built frame (a
+    LogicalRDD with unknown stats: the executor route) and a pandas-built
+    one (a LocalRelation: the known-small route)."""
+    import pandas as pd
+
+    from lanterndb_spark.plans.shape import known_small
+
+    ddl = "q_id long, query array<double>"
+    ldf = spark.createDataFrame(rows, ddl)
+    pdf = spark.createDataFrame(pd.DataFrame({
+        "q_id": pd.array([q for q, _ in rows], dtype="Int64"),
+        "query": [v for _, v in rows],
+    }), ddl)
+    assert not known_small(ldf) and known_small(pdf)
+    return ldf, pdf
+
+
+def _assert_routes_equal_batch(spark, idx, qs, **kw):
+    """hnsw_search_batch, the known-small route and the executor route
+    return identical sorted (q_id, id, round(dist, 9)) rows."""
     from lanterndb_spark.operators.hnsw import (
         hnsw_search_batch, hnsw_search_df,
     )
 
+    def key(rows):
+        return sorted((int(r["q_id"]), int(r["vec_id"]),
+                       round(float(r["dist"]), 9)) for r in rows)
+
+    want = key(hnsw_search_batch(idx, qs, **kw).collect())
+    assert want
+    for qdf in _list_and_pandas(spark, list(enumerate(qs))):
+        assert key(hnsw_search_df(idx, qdf, **kw).collect()) == want
+
+
+def test_search_df_equals_batch(index, ridx, emb, spark):
+    """hnsw_search_df must return exactly what the driver-list
+    hnsw_search_batch returns on BOTH routes — same lockstep core, same
+    routing, same tie-breaks: hash routing (with tombstones too), the
+    replicated cluster-routed probe, and cos."""
     qs = [qvec(emb, i) for i in (1, 5, 9, 23, 44)]
-    got_b = hnsw_search_batch(index, qs, k=5, ef=32).collect()
-    qdf = spark.createDataFrame(
-        [(i, q) for i, q in enumerate(qs)], "q_id long, query array<double>"
+    _assert_routes_equal_batch(spark, index, qs, k=5, ef=32)
+    _assert_routes_equal_batch(spark, index, qs, k=5, ef=32,
+                               deleted={1, 5, 6, 23})
+    _assert_routes_equal_batch(spark, ridx, qs, k=5, ef=32, nprobe=2)
+    cidx = build_hnsw(
+        emb, "embedding", id_col="vec_id", m=8, ef_construction=64,
+        num_shards=2, seed=42, metric="cos",
     )
-    got_d = hnsw_search_df(index, qdf, k=5, ef=32).collect()
-    assert _pairs_by_q(got_d) == _pairs_by_q(got_b)
+    _assert_routes_equal_batch(spark, cidx, qs, k=5, ef=32)
+    cidx.graphs.unpersist()
 
 
 def test_search_df_cluster_routed_and_pq(emb, spark):
     """DF-native search composes with cluster routing (nprobe pruning)
-    and pq rerank, matching the driver-list twin on both."""
-    from lanterndb_spark.operators.hnsw import (
-        hnsw_search_batch, hnsw_search_df,
-    )
-
+    and pq rerank, matching the driver-list twin on both routes."""
     idx = build_hnsw(
         emb, "embedding", id_col="vec_id", m=8, ef_construction=64,
         num_shards=4, seed=42, routing="cluster", quant="pq",
         pq_splits=4, pq_clusters=16,
     )
     qs = [qvec(emb, i) for i in (2, 7, 31)]
-    got_b = hnsw_search_batch(
-        idx, qs, k=4, ef=48, nprobe=2, base=emb
-    ).collect()
-    qdf = spark.createDataFrame(
-        [(i, q) for i, q in enumerate(qs)], "q_id long, query array<double>"
-    )
-    got_d = hnsw_search_df(
-        idx, qdf, k=4, ef=48, nprobe=2, base=emb
-    ).collect()
-    assert _pairs_by_q(got_d) == _pairs_by_q(got_b)
+    _assert_routes_equal_batch(spark, idx, qs, k=4, ef=48, nprobe=2, base=emb)
+    _assert_routes_equal_batch(spark, idx, qs, k=4, ef=48, nprobe=2)
     idx.graphs.unpersist()
 
 
@@ -1086,6 +1110,83 @@ def test_search_df_dup_path_runs_no_extra_job(index, emb, spark, job_ids):
 
     assert njobs([(7, qa), (7, qb), (None, qc)]) == njobs(
         [(0, qa), (1, qb), (2, qc)])
+
+
+def test_search_df_duplicate_null_q_ids_known_small_route(
+        index, ridx, emb, spark, job_ids):
+    """The known-small route keys rows by position: duplicate and NULL
+    integral q_ids answer exactly what the same rows under string keys
+    answer (NULL labels kept), with no check and no surrogate wrap — so
+    such a frame runs as many jobs as one with unique keys. The pq
+    re-rank on that route is keyed by position too."""
+    from lanterndb_spark.operators.hnsw import hnsw_search_df
+
+    qa, qb, qc, qd = (qvec(emb, i) for i in (1, 29, 44, 5))
+    rows = [(7, qa), (7, qb), (7, qa), (None, qc), (None, qd), (3, qc)]
+    _, pdf = _list_and_pandas(spark, rows)
+    _, sdf = _long_and_string(spark, rows)
+    _, udf = _list_and_pandas(
+        spark, [(i, v) for i, (_, v) in enumerate(rows)])
+    pidx = build_hnsw(
+        emb, "embedding", id_col="vec_id", m=8, ef_construction=64,
+        num_shards=2, seed=42, quant="pq", pq_splits=4, pq_clusters=16,
+    )
+    for idx, kw in ((index, {}), (ridx, {"nprobe": 2}),
+                    (pidx, {"base": emb})):
+        got = hnsw_search_df(idx, pdf, k=5, ef=32, **kw).collect()
+        exp = hnsw_search_df(idx, sdf, k=5, ef=32, **kw).collect()
+        assert len(got) == 30  # 6 input rows x k
+        assert _per_row_key(got) == _per_row_key(exp)
+
+    def njobs(qdf):
+        def run():
+            return hnsw_search_df(index, qdf, k=5, ef=32).collect()
+
+        run()  # warm
+        return len(job_ids(run)[1])
+
+    assert njobs(pdf) == njobs(udf)
+    pidx.graphs.unpersist()
+
+
+def test_search_collected_broadcast_payload(index, emb, spark, monkeypatch):
+    """Query payloads above _CLOSURE_BYTES reach the known-small kernel
+    through a broadcast instead of the closure: the same rows, keys
+    (NULL included) and positions either way."""
+    from lanterndb_spark.operators import hnsw as H
+
+    qs = [qvec(emb, i) for i in (1, 5, 9)]
+    _, pdf = _list_and_pandas(spark, [(4, qs[0]), (None, qs[1]), (4, qs[2])])
+
+    def both():
+        return (sorted(H.hnsw_search_batch(index, qs, k=5, ef=32).collect()),
+                _per_row_key(H.hnsw_search_df(index, pdf, k=5, ef=32).collect()))
+
+    want = both()
+    monkeypatch.setattr(H, "_CLOSURE_BYTES", 0)
+    assert both() == want and len(want[1]) == 15
+
+
+def test_search_df_known_small_jobs_within_batch(index, emb, spark, job_ids):
+    """A warm known-small call runs the driver-list kernel: no more jobs
+    than hnsw_search_batch on the same queries (the pandas-built frame
+    collects without a job)."""
+    from lanterndb_spark.operators.hnsw import (
+        hnsw_search_batch, hnsw_search_df,
+    )
+
+    qs = [qvec(emb, i) for i in (1, 5, 9)]
+    _, pdf = _list_and_pandas(spark, list(enumerate(qs)))
+
+    def warm_jobs(fn):
+        fn()
+        return len(job_ids(fn)[1])
+
+    n_df = warm_jobs(
+        lambda: hnsw_search_df(index, pdf, k=5, ef=32).collect())
+    n_batch = warm_jobs(
+        lambda: hnsw_search_batch(index, qs, k=5, ef=32).collect())
+    assert n_df <= n_batch, (n_df, n_batch)
 
 
 def test_surrogate_checkpoint_blocks_released(index, emb, spark):
@@ -1427,15 +1528,12 @@ def test_search_df_graphs_cogroup_no_exchange(emb, spark):
 
 
 def test_search_df_broadcast_queries_matches_executor(index, emb, spark):
-    """r15: the driver prep+route for known-small query frames
+    """The driver route for known-small query frames
     (broadcast_queries) must return rows identical to the executor
     prep/route path — full probe AND cluster-routed nprobe, cos
-    included (zero-norm drop happens in the same _norm_rows). The
-    driver route's routed relation is a narrow driver-built
-    LocalTableScan and its plan carries NO query-side Python pass
-    (measured: 1.22 vs 1.81 s median per 64-row semdedup-shaped batch;
-    job count is NOT asserted — the route trades in-action Python
-    stages for two driver collects, so its win is wall, not jobs)."""
+    included (zero-norm drop happens in the same _prep_rows). The
+    driver route runs the driver-list kernel: one MapInPandas over the
+    graphs, no cogroup and no query-side Python pass."""
     import io
     from contextlib import redirect_stdout
 
@@ -1458,9 +1556,10 @@ def test_search_df_broadcast_queries_matches_executor(index, emb, spark):
     rows_d, plan_d = run(True)
     rows_e, plan_e = run(False)
     assert rows_d == rows_e and rows_d
-    # driver route: narrow (pos, shard) LocalTableScan feeds the
-    # cogroup; executor route: a MapInPandas prep over the query frame
-    assert "LocalTableScan" in plan_d and "LocalTableScan" not in plan_e
+    # driver route: one kernel pass over the graphs; executor route:
+    # a MapInPandas prep over the query frame feeds the shard cogroup
+    assert "FlatMapCoGroupsInPandas" not in plan_d
+    assert "FlatMapCoGroupsInPandas" in plan_e
     n_py_d = plan_d.count("MapInPandas")
     n_py_e = plan_e.count("MapInPandas")
     assert n_py_d < n_py_e, (n_py_d, n_py_e)

@@ -164,6 +164,31 @@ def test_ivf_batch_arrow_matches_expr(emb, index):
         assert ka == kb
 
 
+def test_ivf_batch_arrow_blocks_queries(emb, index, monkeypatch):
+    """The arrow kernel scores the queries in blocks of
+    _SCORE_BLOCK_ELEMS // rows, so its (rows x queries) distance matrix
+    stays bounded however many queries the batch holds: one query per
+    block returns exactly the unblocked rows (a zero-norm cos query
+    included)."""
+    from lanterndb_spark.operators import ivf as ivf_mod
+
+    qs = [qvec(emb, i) for i in (3, 11, 17, 29, 41)]
+    qs.append([0.0] * len(qs[0]))
+
+    def rows(metric):
+        out = ivf_mod.ivf_search_batch(
+            index, qs, k=5, nprobe=4, metric=metric, id_col="vec_id",
+            impl="arrow",
+        ).collect()
+        return sorted(
+            (r["q_id"], r["vec_id"], round(r["dist"], 9)) for r in out)
+
+    want = {m: rows(m) for m in ("l2sq", "cos")}
+    monkeypatch.setattr(ivf_mod, "_SCORE_BLOCK_ELEMS", 1)
+    for metric, exp in want.items():
+        assert exp and rows(metric) == exp
+
+
 def test_empty_build_and_search(spark):
     from lanterndb_spark.operators.ivf import build_ivf, ivf_search
 

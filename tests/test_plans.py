@@ -622,6 +622,25 @@ def test_estimated_rows_reads_local_relations(spark):
     assert estimated_rows(v.filter("q_id < 3")) == 2.0
 
 
+def test_known_small_by_frame_construction(spark):
+    """known_small by how an ad-hoc query frame is built: a Python-list
+    createDataFrame plans as a LogicalRDD with unknown stats (False, so
+    the ANN searches take their executor routes); pandas- and Arrow-
+    built frames are LocalRelations with an exact count (True, the
+    known-small routes)."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from lanterndb_spark.plans.shape import known_small
+
+    ddl = "q_id long, x double"
+    rows = [(i, float(i)) for i in range(8)]
+    assert not known_small(spark.createDataFrame(rows, ddl))
+    pdf = pd.DataFrame(rows, columns=["q_id", "x"])
+    assert known_small(spark.createDataFrame(pdf, ddl))
+    assert known_small(spark.createDataFrame(pa.Table.from_pandas(pdf)))
+
+
 def test_coalesce_known_small_bounds_python_tasks(spark):
     """r14 contract for the query-routing coalesce: a KNOWN-small input
     (materialized cache stats) routes in ceil(rows/rows_per_task) tasks;
