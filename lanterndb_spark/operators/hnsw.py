@@ -71,9 +71,6 @@ _EFC_DEFAULT = 128       # ef_construction default (options.h)
 _EF_DEFAULT = 64         # ef search default (options.h)
 _CHUNK = 128             # lockstep insert batch (hnswlib-concurrency analogue)
 _MAX_BATCH_QUERIES = 100_000  # driver-list search cap (knn.py contract)
-# batch query payloads up to this size ride the kernel's closure: a Python
-# broadcast costs ~0.1 s per 32-task job (4 vCPUs), more than 1 MB/task
-_CLOSURE_BYTES = 1 << 20
 _UPPER_EXACT = 4096      # upper-level graphs below this size search exactly
 
 # Blob header: 4-byte magic + 16 random bytes stamped at serialization
@@ -1990,8 +1987,9 @@ def _search_collected(
     """The known-small batch kernel of ``hnsw_search_batch`` and
     ``hnsw_search_df``'s driver route over driver-resident query
     vectors ``raw``: prep and route once on the driver, ship the prepped
-    matrix and probe map in the closure (a broadcast above
-    ``_CLOSURE_BYTES``), ONE mapInPandas over the probed graphs running
+    matrix and probe map in the kernel's closure (PySpark broadcasts a
+    pickled command above ``spark.broadcast.UDFCompressionThreshold``,
+    1 MiB by default), ONE mapInPandas over the probed graphs running
     each shard's queries in lockstep, cut to kk per query in the same
     worker, and one window keyed by row POSITION (duplicate or NULL keys
     need no check). ``keys`` (long, NULLs allowed) ride beside the
@@ -2020,31 +2018,27 @@ def _search_collected(
         graphs = graphs.filter(F.col("shard").isin(sorted(probe_map)))
     spark = graphs.sparkSession
     qk = None if keys is None else pd.array(keys, dtype="Int64")
-    payload, bc = (pos, Qp, probe_map, qk), None
-    if Qp.nbytes > _CLOSURE_BYTES:
-        payload, bc = None, spark.sparkContext.broadcast(payload)
     cut = _partial_topk(["__pos"], kk, replicated)
 
     def search(batches):
-        pos_, Qm, pmap, _ = payload or bc.value
-        every = np.arange(len(pos_))
+        every = np.arange(len(pos))
         for pdf in batches:
             for shard, blob in zip(pdf["shard"], pdf["blob"]):
-                rows = every if pmap is None else pmap.get(int(shard), ())
+                rows = (every if probe_map is None
+                        else probe_map.get(int(shard), ()))
                 hit = len(rows) and _beam_rows(
-                    blob, Qm[rows].tolist(), kk, ef, dead, scale)
+                    blob, Qp[rows].tolist(), kk, ef, dead, scale)
                 if hit:
                     cnts, gid, dist = hit
                     yield pd.DataFrame({
-                        "__pos": np.repeat(pos_[rows].astype(np.int32), cnts),
+                        "__pos": np.repeat(pos[rows].astype(np.int32), cnts),
                         "__gid": gid, "dist": dist,
                     })
 
     def run(batches):
-        qk_ = (payload or bc.value)[3]
         for out in cut(search(batches)):
-            if qk_ is not None:
-                out.insert(1, "q_id", qk_.take(out["__pos"].to_numpy()))
+            if qk is not None:
+                out.insert(1, "q_id", qk.take(out["__pos"].to_numpy()))
             yield out
 
     key, ddl = ["__pos"], "__pos int, "
@@ -2330,14 +2324,14 @@ def hnsw_search_df(
         its probed shard under cluster routing, one copy otherwise."""
         for pdf in batches:
             live, Qp = _prep_rows(metric, pdf["__q"].tolist())
-            keys = pdf[kdf_cols].iloc[live]
+            keys, ql = pdf[kdf_cols].iloc[live], Qp.tolist()
             blocks = (_route_blocks(cents, Qp, np_eff) if routed_probe
                       else [(0, None)] if len(Qp) else [])
             for s, sh in blocks:
                 B = len(Qp) if sh is None else len(sh)
                 rows = np.repeat(np.arange(s, s + B), max(np_eff, 1))
                 out = {c: keys[c].to_numpy()[rows] for c in kdf_cols}
-                out["__q"] = [Qp[i].tolist() for i in rows]
+                out["__q"] = [ql[i] for i in rows]
                 if sh is not None:
                     out["__shard"] = sh.reshape(-1).astype(np.int32)
                 yield pd.DataFrame(out)

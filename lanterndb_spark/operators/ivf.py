@@ -345,22 +345,64 @@ _SCORE_BLOCK_ELEMS = 1 << 24
 
 def _route_blocks(cents: np.ndarray, qarr: np.ndarray, np_eff: int):
     """Yield ``(start, probes)`` per block of queries: each query's
-    ``np_eff`` nearest centroids, by the SAME ``((cents - q)**2).sum``
-    formulation and np.argsort as ivf_search / ivf_search_batch, so probe
-    choice is bit-identical to the driver-list forms even at near-tied
-    centroid distances (a matmul expansion can order such ties
-    differently). Blocked so the (B, nlist, dim) difference tensor stays
-    within ``_ROUTE_BLOCK_ELEMS``; each query's row is computed alone, so
-    the block size never changes a probe. The one routing of the ivf
-    family AND of cluster-routed hnsw (shards are its cells): every
-    hnsw search form, single-query to executor route, probes through
-    it."""
+    ``np_eff`` nearest centroids, bit-identical (set AND order) to the
+    ``((cents - q)**2).sum`` formulation and np.argsort of ivf_search /
+    ivf_search_batch, even at near-tied centroid distances. A BLAS
+    ``|q|² + |c|² − 2·q·cᵀ`` pass keeps the centroids within a rounding
+    bound of each query's np_eff-th expanded distance; only those are
+    re-scored by the exact formulation. A query whose exact top
+    np_eff + 1 distances hold a tie falls back to the full argsort of
+    its row, so tie order never differs either. Blocked so the
+    (B, nlist, dim) tensor stays within ``_ROUTE_BLOCK_ELEMS``; each
+    query's row is computed alone, so the block size never changes a
+    probe. The one routing of the ivf family AND of cluster-routed hnsw
+    (shards are its cells): every hnsw search form, single-query to
+    executor route, probes through it."""
     dim = cents.shape[1] if cents.ndim == 2 else 1
     blk = max(1, _ROUTE_BLOCK_ELEMS // max(len(cents) * dim, 1))
+    cn = np.einsum("sd,sd->s", cents, cents)
     for s in range(0, len(qarr), blk):
-        qb = qarr[s : s + blk]
-        d = ((cents[None, :, :] - qb[:, None, :]) ** 2).sum(-1)
-        yield s, np.argsort(d, axis=1)[:, :np_eff]
+        yield s, _route_block(cents, cn, qarr[s : s + blk], np_eff)
+
+
+def _full_route(cents: np.ndarray, qb: np.ndarray, np_eff: int) -> np.ndarray:
+    """The exact formulation over every centroid."""
+    d = ((cents[None, :, :] - qb[:, None, :]) ** 2).sum(-1)
+    return np.argsort(d, axis=1)[:, :np_eff]
+
+
+def _route_block(cents, cn, qb, np_eff: int) -> np.ndarray:
+    """:func:`_route_blocks`' probes for one query block."""
+    S, dim = len(cents), cents.shape[-1]
+    if 2 * (np_eff + 1) > S:  # a prefilter cannot drop half the row
+        return _full_route(cents, qb, np_eff)
+    # cn − 2·q·cᵀ orders each row as |q − c|² does (|q|² is a per-row
+    # shift); |expanded − exact| <= ~(2·dim + 5)·u·(|q| + |c|)² with
+    # u = eps / 2, and tol bounds it 4x over, so every centroid whose
+    # exact distance can reach the exact np_eff-th lies within kth + 2·tol
+    approx = qb @ cents.T
+    approx *= -2.0
+    approx += cn
+    if not np.isfinite(approx).all():
+        return _full_route(cents, qb, np_eff)
+    cand = np.argpartition(approx, (np_eff - 1, np_eff), axis=1)
+    kth = np.take_along_axis(approx, cand[:, np_eff - 1 : np_eff], 1)
+    tol = 4 * (dim + 4) * np.finfo(np.float64).eps * (
+        np.sqrt(np.einsum("bd,bd->b", qb, qb)) + np.sqrt(cn.max())) ** 2
+    m = max(int((approx <= kth + 2 * tol[:, None]).sum(1).max()), np_eff + 1)
+    if 2 * m > S:
+        return _full_route(cents, qb, np_eff)
+    if m > np_eff + 1:
+        cand = np.argpartition(approx, m - 1, axis=1)
+    cand = cand[:, :m]
+    d = ((cents[cand] - qb[:, None, :]) ** 2).sum(-1)
+    order = np.argsort(d, axis=1)[:, : np_eff + 1]
+    ds = np.take_along_axis(d, order, 1)
+    probes = np.take_along_axis(cand, order[:, :np_eff], 1)
+    tie = (ds[:, 1:] == ds[:, :-1]).any(1)
+    if tie.any():
+        probes[tie] = _full_route(cents, qb[tie], np_eff)
+    return probes
 
 
 def _route_probes(cents: np.ndarray, qarr: np.ndarray, np_eff: int) -> np.ndarray:

@@ -1149,24 +1149,6 @@ def test_search_df_duplicate_null_q_ids_known_small_route(
     pidx.graphs.unpersist()
 
 
-def test_search_collected_broadcast_payload(index, emb, spark, monkeypatch):
-    """Query payloads above _CLOSURE_BYTES reach the known-small kernel
-    through a broadcast instead of the closure: the same rows, keys
-    (NULL included) and positions either way."""
-    from lanterndb_spark.operators import hnsw as H
-
-    qs = [qvec(emb, i) for i in (1, 5, 9)]
-    _, pdf = _list_and_pandas(spark, [(4, qs[0]), (None, qs[1]), (4, qs[2])])
-
-    def both():
-        return (sorted(H.hnsw_search_batch(index, qs, k=5, ef=32).collect()),
-                _per_row_key(H.hnsw_search_df(index, pdf, k=5, ef=32).collect()))
-
-    want = both()
-    monkeypatch.setattr(H, "_CLOSURE_BYTES", 0)
-    assert both() == want and len(want[1]) == 15
-
-
 def test_search_df_known_small_jobs_within_batch(index, emb, spark, job_ids):
     """A warm known-small call runs the driver-list kernel: no more jobs
     than hnsw_search_batch on the same queries (the pandas-built frame

@@ -1363,6 +1363,55 @@ def test_ivfpq_search_df_runs_no_codebook_job(emb, spark, job_ids):
     assert names and not [n for n in names if "pq.py" in n], names
 
 
+def test_route_prefilter_matches_full_argsort(monkeypatch):
+    """_route_blocks re-scores only the centroids a BLAS expansion keeps
+    within its rounding bound: probes equal the full exact argsort,
+    order included, on far-offset data (where the expansion cancels),
+    duplicated centroids and queries placed on centroids (exact ties,
+    which fall back to the full row)."""
+    import numpy as np
+
+    from lanterndb_spark.operators import ivf as ivfmod
+
+    full_rows = []
+    full = ivfmod._full_route
+    monkeypatch.setattr(
+        ivfmod, "_full_route",
+        lambda c, q, n: full_rows.append(len(q)) or full(c, q, n),
+    )
+    rng = np.random.default_rng(7)
+    for dim, scale, off in ((8, 1.0, 0.0), (64, 1.0, 1e3), (33, 1e2, 1e6)):
+        cents = rng.standard_normal((300, dim)) * scale + off
+        cents[rng.integers(0, 300, 12)] = cents[rng.integers(0, 300, 12)]
+        qarr = rng.standard_normal((200, dim)) * scale + off
+        qarr[:20] = cents[rng.integers(0, 300, 20)]
+        for np_eff in (1, 3, 9):
+            want = np.argsort(
+                ((cents[None, :, :] - qarr[:, None, :]) ** 2).sum(-1), axis=1
+            )[:, :np_eff]
+            assert np.array_equal(ivfmod._route_probes(cents, qarr, np_eff),
+                                  want)
+    # most rows took the prefilter; the tied ones took the full row
+    assert 0 < sum(full_rows) < 9 * 200 // 2
+    # six centroids ~1e7 from the origin whose distances to each query
+    # differ by far less than the expansion's rounding (~0.1), the rest
+    # 100x further: only the rounding bound keeps the exact nearest
+    del full_rows[:]
+    rng = np.random.default_rng(7)
+    off = 1e7 * rng.standard_normal(16)
+    basis = np.linalg.qr(rng.standard_normal((16, 16)))[0]
+    near = off + basis[:6] * (1 + 1e-3 * np.arange(6))[:, None]
+    far = off + 100 * rng.standard_normal((58, 16))
+    cents = np.vstack([far[:30], near, far[30:]])
+    qarr = off + 1e-3 * rng.standard_normal((80, 16))
+    want = np.argsort(
+        ((cents[None, :, :] - qarr[:, None, :]) ** 2).sum(-1), axis=1
+    )[:, :1]
+    assert len(np.unique(want)) > 1
+    assert np.array_equal(ivfmod._route_probes(cents, qarr, 1), want)
+    assert not full_rows
+
+
 def test_driver_route_probes_independent_of_block_size(
     tables, spark, monkeypatch
 ):
