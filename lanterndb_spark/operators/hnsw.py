@@ -2086,8 +2086,8 @@ def hnsw_search_batch(
     exactly. Capped at 100k queries (knn.py's broadcast contract)."""
     if len(queries) > _MAX_BATCH_QUERIES:
         raise ValueError(
-            f"hnsw_search_batch broadcasts the query list; got "
-            f"{len(queries)} > {_MAX_BATCH_QUERIES} queries. Use "
+            f"hnsw_search_batch ships the query list in the task closure; "
+            f"got {len(queries)} > {_MAX_BATCH_QUERIES} queries. Use "
             f"hnsw_search_df, which shuffles queries as a DataFrame."
         )
     return _search_collected(index, queries, k, ef, deleted, nprobe, base)

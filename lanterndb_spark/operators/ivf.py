@@ -346,10 +346,10 @@ _SCORE_BLOCK_ELEMS = 1 << 24
 def _route_blocks(cents: np.ndarray, qarr: np.ndarray, np_eff: int):
     """Yield ``(start, probes)`` per block of queries: each query's
     ``np_eff`` nearest centroids, bit-identical (set AND order) to the
-    ``((cents - q)**2).sum`` formulation and np.argsort of ivf_search /
-    ivf_search_batch, even at near-tied centroid distances. A BLAS
-    ``|q|² + |c|² − 2·q·cᵀ`` pass keeps the centroids within a rounding
-    bound of each query's np_eff-th expanded distance; only those are
+    full ``((cents - q)**2).sum`` formulation and np.argsort that
+    ivf_search runs, even at near-tied centroid distances. A BLAS
+    ``|c|² − 2·q·cᵀ`` pass keeps the centroids within a rounding bound
+    of each query's np_eff-th expanded distance; only those are
     re-scored by the exact formulation. A query whose exact top
     np_eff + 1 distances hold a tie falls back to the full argsort of
     its row, so tie order never differs either. Blocked so the
@@ -1406,8 +1406,7 @@ def ivf_search_batch(
 
     spark = index.assigned.sparkSession
     qarr = np.asarray(queries, dtype=np.float64)
-    d = ((index.centroids[None, :, :] - qarr[:, None, :]) ** 2).sum(axis=2)
-    probe_ids = np.argsort(d, axis=1)[:, :nprobe]
+    probe_ids = _route_probes(index.centroids, qarr, nprobe)
     from lanterndb_spark.plans.shape import widen_partitions
 
     # static partition-pruning filter: the equi-join alone doesn't prune a
